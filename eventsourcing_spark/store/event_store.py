@@ -8,12 +8,14 @@ DataFrame views and conflict-checked parquet appends:
                          duplicate ⇒ ConcurrentModificationError,
                          store/postgresql/store.go:258-264)
 * S2 ``get_aggregate_events`` — by-stream scan in fold order
-                         (store/postgresql/store.go:423-444)
+                         (store/postgresql/store.go:423-444);
+                         ``read_aggregate_events`` is its driver-side twin
 * S3 ``get_events``    — global keyset range scan `(after, until]` with
                          the Filter algebra (store/postgresql/store.go:497-518)
 * S4 ``get_events_by_ids``   (store/postgresql/store.go:665-674)
 * S5 ``get_snapshot`` / ``latest_snapshots`` — argmax by id
-                         (store/postgresql/store.go:295-323)
+                         (store/postgresql/store.go:295-323);
+                         ``read_snapshot`` is its driver-side twin
 * F1-F3 ``Filter``     — kinds / discriminator / splits
                          (store/store.go:75-82, store/postgresql/store.go:522-577)
 * F8                   — standing ``migration = 0`` view
@@ -23,7 +25,10 @@ DataFrame views and conflict-checked parquet appends:
 Storage is a directory of parquet appends. On a production cluster the
 same protocol runs over Delta/Iceberg where the conflict check and the
 append commit atomically; the class isolates that seam in
-``_check_conflicts`` + ``_append_rows`` so only those two methods change.
+``_read_stream`` + ``_append_rows`` so only those two methods change.
+``_read_stream`` serves both the conflict check and the single-key point
+reads (``read_aggregate_events``, ``read_snapshot``), so on a lakehouse
+those reads must see the same table version as the conflict check.
 Partition layout: events are written with a ``bucket`` column =
 ``pmod(aggregate_id_hash, n_buckets)`` and partitioned by it on disk,
 mirroring the reference's split predicate (F3) so split-filtered scans
@@ -85,6 +90,14 @@ def _discriminator_predicate(discriminator: dict[str, str] | None) -> Column:
     for k, v in sorted((discriminator or {}).items()):
         pred = pred & (F.col("discriminator").getItem(k) == v)
     return pred
+
+
+def _discriminator_matches(row_disc, discriminator: dict[str, str]) -> bool:
+    """Row-side twin of ``_discriminator_predicate``: ``row_disc`` is a
+    map column as pyarrow yields it (``[(k, v), ...]`` or None). A missing
+    key or a null on either side never matches, as in SQL."""
+    have = dict(row_disc or ())
+    return all(v is not None and have.get(k) == v for k, v in discriminator.items())
 
 
 class EventStore:
@@ -161,9 +174,30 @@ class EventStore:
         df = self._events_pruned([bucket]).filter(
             (F.col("aggregate_id") == aggregate_id)
             & (F.col("aggregate_version") > gt_version)
-            & _discriminator_predicate(discriminator)
+            & _discriminator_predicate(self._restrict_disc(discriminator))
         )
         return df.orderBy("aggregate_version")
+
+    def read_aggregate_events(
+        self,
+        aggregate_id: str,
+        gt_version: int = 0,
+        discriminator: dict[str, str] | None = None,
+    ) -> list[dict]:
+        """S2 driver-side: the rows of ``get_aggregate_events`` as dicts of
+        ``id, aggregate_version, kind, body``, in fold order, read from the
+        stream's bucket directory without a Spark job."""
+        import pyarrow.dataset as ds
+
+        rows = self._read_stream(
+            self._bucket_dir(aggregate_id),
+            aggregate_id,
+            ["id", "aggregate_version", "kind", "body"],
+            where=(ds.field("migration") == 0)
+            & (ds.field("aggregate_version") > gt_version),
+            discriminator=self._restrict_disc(discriminator),
+        )
+        return sorted(rows, key=lambda r: r["aggregate_version"])
 
     def get_events(
         self,
@@ -190,7 +224,7 @@ class EventStore:
             df = self._events_pruned(allowed).filter(filter.predicate())
         else:
             df = self.events().filter(filter.predicate())
-        df = df.filter(_discriminator_predicate(discriminator))
+        df = df.filter(_discriminator_predicate(self._restrict_disc(discriminator)))
         if after:
             df = df.filter(F.col("id") > after)
         if until is not None:
@@ -212,11 +246,25 @@ class EventStore:
             self.snapshots()
             .filter(
                 (F.col("aggregate_id") == aggregate_id)
-                & _discriminator_predicate(discriminator)
+                & _discriminator_predicate(self._restrict_disc(discriminator))
             )
             .orderBy(F.desc("id"))
             .limit(1)
         )
+
+    def read_snapshot(
+        self, aggregate_id: str, discriminator: dict[str, str] | None = None
+    ) -> dict | None:
+        """S5 driver-side: the row of ``get_snapshot`` as a dict of ``id,
+        aggregate_version, aggregate_kind, body`` (None when the stream has
+        no snapshot), read without a Spark job."""
+        rows = self._read_stream(
+            self._snapshots_dir,
+            aggregate_id,
+            ["id", "aggregate_version", "aggregate_kind", "body"],
+            discriminator=self._restrict_disc(discriminator),
+        )
+        return max(rows, key=lambda r: r["id"], default=None)
 
     def latest_snapshots(self) -> DataFrame:
         """Set-oriented S5: argmax by id per aggregate (one shuffle, map-side
@@ -433,33 +481,62 @@ class EventStore:
             if k in self.allowed_discriminator_keys
         }
 
-    def _check_conflicts(self, aggregate_id: str, versions: list[int]) -> str | None:
-        """Single stream-scan: conflict detection + last existing id.
-        Returns the stream's max id (or None); raises on version clash.
+    def _read_stream(
+        self,
+        directory: str,
+        aggregate_id: str,
+        columns: list[str],
+        where=None,
+        discriminator: dict[str, str] | None = None,
+    ) -> list[dict]:
+        """Driver-side point read of one stream's rows in ``directory``.
 
-        Runs driver-side on the stream's bucket directory only (pyarrow,
-        predicate pushed to row-group stats) — a single-key point read
-        must not launch a cluster job while holding the commit lock; the
-        bucket layout guarantees every row of this aggregate lives here.
+        ``directory`` is the stream's bucket directory (events: the bucket
+        layout guarantees every row of the aggregate lives there) or the
+        snapshots directory. pyarrow pushes ``aggregate_id == …`` and the
+        optional ``where`` expression down to row-group statistics, so a
+        single-key read launches no cluster job. The F4 ``discriminator``
+        conjunction runs on the few surviving rows.
         """
         import pyarrow.dataset as ds
 
-        bucket = fnv1a_32_py(aggregate_id) % self.n_buckets
-        bucket_dir = os.path.join(self._events_dir, f"bucket={bucket}")
-        if not self._exists(bucket_dir):
-            return None
-        table = ds.dataset(bucket_dir, format="parquet").to_table(
-            columns=["id", "aggregate_version"],
-            filter=ds.field("aggregate_id") == aggregate_id,
+        if not self._exists(directory):
+            return []
+        flt = ds.field("aggregate_id") == aggregate_id
+        if where is not None:
+            flt = flt & where
+        read = columns + ["discriminator"] if discriminator else columns
+        rows = (
+            ds.dataset(directory, format="parquet")
+            .to_table(columns=read, filter=flt)
+            .to_pylist()
         )
-        if table.num_rows == 0:
+        if discriminator:
+            rows = [
+                r for r in rows
+                if _discriminator_matches(r.pop("discriminator"), discriminator)
+            ]
+        return rows
+
+    def _check_conflicts(self, aggregate_id: str, versions: list[int]) -> str | None:
+        """Single stream-scan over all generations: conflict detection +
+        last existing id. Returns the stream's max id (or None); raises on
+        version clash. Driver-side, so no cluster job runs while the
+        commit lock is held."""
+        rows = self._read_stream(
+            self._bucket_dir(aggregate_id), aggregate_id, ["id", "aggregate_version"]
+        )
+        if not rows:
             return None
-        existing = set(table.column("aggregate_version").to_pylist())
-        if existing.intersection(versions):
+        if {r["aggregate_version"] for r in rows}.intersection(versions):
             raise ConcurrentModificationError(
                 f"{aggregate_id}: version(s) {versions} already exist"
             )
-        return max(table.column("id").to_pylist())
+        return max(r["id"] for r in rows)
+
+    def _bucket_dir(self, aggregate_id: str) -> str:
+        bucket = fnv1a_32_py(aggregate_id) % self.n_buckets
+        return os.path.join(self._events_dir, f"bucket={bucket}")
 
     _ARROW_EVENT_SCHEMA = None
 
@@ -503,8 +580,7 @@ class EventStore:
         table = pa.Table.from_pylist(
             [dict(zip(schema.names, row)) for row in rows], schema=schema
         )
-        bucket = rows[0][2] % self.n_buckets
-        bucket_dir = os.path.join(self._events_dir, f"bucket={bucket}")
+        bucket_dir = self._bucket_dir(rows[0][1])
         os.makedirs(bucket_dir, exist_ok=True)
         pq.write_table(
             table, os.path.join(bucket_dir, f"part-{uuid.uuid4().hex}.parquet")

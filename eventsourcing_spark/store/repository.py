@@ -1,13 +1,14 @@
 """Single-aggregate repository — the reference's primary entry point
 (eventstore.go:230-242 Update, 249-300 retrieve, 338-403 save).
 
-Single-key OLTP reads are Spark-hostile (SURVEY.md §3.1): a full job for
-one aggregate. This class exists for *semantic parity* — same
-retrieve→mutate→save lifecycle, same snapshot-threshold rule, same
-optimistic concurrency — while the set-oriented analytics paths
-(``rehydrate_all``, projections) carry the 100 TB workloads. The reads
-here lean on the store's physical layout: the bucket partition prunes
-the scan to one directory, and snapshot seeding keeps the fold short.
+Same retrieve→mutate→save lifecycle, same snapshot-threshold rule, same
+optimistic concurrency as the reference. Every operation here is a
+single-key point read or write, and none launches a Spark job: the store
+reads the latest snapshot (S5) and the event tail (S2) driver-side from
+the stream's bucket directory — the bucket layout plays the role of the
+reference's index — and appends the same way. Snapshot seeding keeps the
+fold short. The set-oriented paths (``rehydrate_all``, projections)
+carry the 100 TB workloads.
 """
 
 from __future__ import annotations
@@ -53,22 +54,20 @@ class Repository:
         state = self.init()
         version = 0
         last_id = ""
-        snap = self.store.get_snapshot(aggregate_id, discriminator).collect()
-        if snap:
-            row = snap[0]
-            body = bytes(row.body)
+        snap = self.store.read_snapshot(aggregate_id, discriminator)
+        if snap is not None:
             if self.codec is not None:
-                _, state = self.codec.decode(row.aggregate_kind, body)
+                _, state = self.codec.decode(snap["aggregate_kind"], snap["body"])
             else:
-                state = json.loads(body.decode())
-            version = row.aggregate_version
-            last_id = row.id
+                state = json.loads(snap["body"].decode())
+            version = snap["aggregate_version"]
+            last_id = snap["id"]
 
-        events = self.store.get_aggregate_events(
+        events = self.store.read_aggregate_events(
             aggregate_id, gt_version=version, discriminator=discriminator
-        ).collect()
+        )
         for ev in events:
-            kind, body = ev.kind, bytes(ev.body)
+            kind, body = ev["kind"], ev["body"]
             if self.codec is not None:
                 kind, obj = self.codec.decode(kind, body)
             else:
@@ -76,8 +75,8 @@ class Repository:
             handler = self.handlers.get(kind)
             if handler is not None:
                 state = handler(state, kind, obj)
-            version = ev.aggregate_version
-            last_id = ev.id
+            version = ev["aggregate_version"]
+            last_id = ev["id"]
         return Rehydrated(state, version, last_id, len(events))
 
     # ------------------------------------------------------------------ save

@@ -5,12 +5,13 @@
 from __future__ import annotations
 
 import json
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
 
 from eventsourcing_spark.functions.hashing import fnv1a_32_py
+from eventsourcing_spark.maintenance import forget, migrate_in_place
 from eventsourcing_spark.operators.rehydrate import rehydrate_all
 from eventsourcing_spark.store import ConcurrentModificationError, EventStore, Filter
 
@@ -250,3 +251,95 @@ def test_bucket_pruning_matches_full_scan(spark, tmp_path):
         store.get_events(filter=f3).count()
         == store.events().filter(f3.predicate()).count()
     )
+
+
+def test_driver_side_reads_match_views_across_writers(spark, tmp_path):
+    """``read_aggregate_events`` / ``read_snapshot`` return exactly what the
+    S2 / S5 DataFrame views return, over bucket and snapshot directories
+    holding files of every writer: ``bulk_import`` (Spark), ``append`` and
+    ``save_snapshot`` (pyarrow), and the ``forget`` / ``migrate_in_place``
+    rewrites (Spark, leaving ``migration > 0`` generations)."""
+    store = EventStore(spark, str(tmp_path / "mixed"), n_buckets=2)
+    tenant = {"tenant": "abc"}
+    imported = spark.createDataFrame(
+        [
+            (agg, "Account", kind, json.dumps(body), T0 + timedelta(seconds=v),
+             v, disc)
+            for agg, disc, last in (
+                ("m-a", tenant, KIND_DEPOSITED),
+                ("m-b", None, KIND_DEPOSITED),
+                ("m-c", tenant, "OwnerUpdated"),
+            )
+            for v, (kind, body) in enumerate(
+                [(KIND_CREATED, {"money": 10, "owner": "Ann Lee"}),
+                 (KIND_DEPOSITED, {"money": 1}),
+                 (last, {"money": 2, "owner": "Ann B Lee"})],
+                start=1,
+            )
+        ],
+        "aggregate_id string, aggregate_kind string, kind string, body string, "
+        "created_at timestamp, aggregate_version int, "
+        "discriminator map<string,string>",
+    )
+    store.bulk_import(imported)
+
+    def deposit(agg, version, disc, seconds, snapshot=False):
+        last_id, v = store.append(
+            agg, "Account", [(KIND_DEPOSITED, {"money": seconds})],
+            expected_version=version, discriminator=disc,
+            created_at=T0 + timedelta(seconds=seconds),
+        )
+        if snapshot:
+            store.save_snapshot(
+                last_id, agg, v, "Account", {"balance": seconds},
+                discriminator=disc, created_at=T0,
+            )
+        return v
+
+    v_a = deposit("m-a", 3, tenant, 10, snapshot=True)
+    v_b = deposit("m-b", 3, None, 11, snapshot=True)
+    forget(
+        store, "m-a", kinds=(KIND_CREATED,),
+        event_scrubber=lambda kind, body: {**body, "owner": ""},
+    )
+    deposit("m-a", v_a, tenant, 12, snapshot=True)
+    deposit("m-b", v_b, None, 13, snapshot=True)
+    # only m-c migrates: v1-3 become migration=1, v4 Invalidated, v5-7 _V2
+    assert migrate_in_place(
+        store, 1, "Account", ("OwnerUpdated",),
+        lambda evs: [(k + "_V2" if k == "OwnerUpdated" else k, b) for k, b in evs],
+        now=T0 + timedelta(hours=1),
+    ) == 1
+    deposit("m-c", 7, tenant, 14, snapshot=True)
+    deposit("m-c", 8, tenant, 15, snapshot=True)
+
+    assert store.events_raw().filter(F.col("migration") > 0).count() == 3
+    assert store.events().filter(F.col("aggregate_id") == "m-c").count() == 6
+    # every stream now has two snapshots: S5 must pick the latest
+    assert sorted(
+        r.aggregate_id for r in store.snapshots().select("aggregate_id").collect()
+    ) == ["m-a", "m-a", "m-b", "m-b", "m-c", "m-c"]
+
+    def cols(rows, kind_col):
+        return [
+            (r["id"], r["aggregate_version"], r[kind_col], bytes(r["body"]))
+            for r in rows
+        ]
+
+    compared = 0
+    for agg in ("m-a", "m-b", "m-c", "m-missing"):
+        for disc in (None, tenant, {"tenant": "zzz"}):
+            snap_view = cols(
+                [r.asDict() for r in store.get_snapshot(agg, disc).collect()],
+                "aggregate_kind",
+            )
+            snap = store.read_snapshot(agg, disc)
+            assert cols([snap] if snap else [], "aggregate_kind") == snap_view
+            for gt in (0, 2):
+                view = store.get_aggregate_events(agg, gt, disc).collect()
+                got = store.read_aggregate_events(agg, gt, disc)
+                assert cols(got, "kind") == cols([r.asDict() for r in view], "kind"), (
+                    agg, disc, gt,
+                )
+                compared += len(got)
+    assert compared > 0

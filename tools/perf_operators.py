@@ -2,8 +2,10 @@
 
 Builds a real EventStore from the driver's sf events table (bulk_import:
 the 100 TB load path), then times the operator envelope the reference
-cares about: S2/S3/S5 reads, the A1 full rehydration fold, catch-up
-replay end-to-end, and live-phase micro-batch latency.
+cares about: S2/S3/S5 reads (the S2 DataFrame scan and, beside it, the
+driver-side S2+S5 point read that ``Repository`` uses), the A1 full
+rehydration fold, catch-up replay end-to-end, and live-phase micro-batch
+latency.
 
 Usage:  python tools/perf_operators.py [sf_dir]   (default sf0.1)
 Prints one JSON line; wall-clock numbers are best-of-two (the host VM
@@ -69,6 +71,16 @@ def main() -> None:
         # --- S2 single-stream scan (bucket-pruned) ----------------------
         out["s2_stream_scan_sec"] = best_of(
             2, lambda: store.get_aggregate_events(some_id).collect()
+        )
+        # --- S2+S5 driver-side point read (the Repository.retrieve path:
+        # latest snapshot + tail, pyarrow over one bucket, no Spark job;
+        # this store has no snapshots, so S5 only finds none) ------------
+        out["s2_s5_point_read_sec"] = best_of(
+            2,
+            lambda: (
+                store.read_snapshot(some_id),
+                store.read_aggregate_events(some_id),
+            ),
         )
         # --- S3 keyset range scan (first 1000 by id) --------------------
         bounds = store.events().agg(
