@@ -38,10 +38,6 @@ fires on true duplicate pileups, not on corpus growth.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import time
-
 from pyspark.sql import functions as F
 
 from eventsourcing_spark.io import load_table, materialize
@@ -95,99 +91,10 @@ def _edges_sql(directed: bool = False) -> str:
     """
 
 
-# Session-scoped memo for the two expensive shared prologues of this
-# module (the LSH edge set and the LPA label table): fixture-style,
-# keyed by (applicationId, source fingerprint, builder, args). Every
-# graph gate query re-derives _edges_df and two of them re-run the
-# identical LPA rounds; inside one session (the bench battery, driver
-# exec-all, an analyst notebook) those derivations are deterministic
-# materializations (localCheckpoint), so rebuilding is pure waste —
-# ~8 s of the 77-query battery. Staleness and lifetime:
-#
-# * the key carries a cheap CONTENT fingerprint of the sf_dir's parquet
-#   listing (relative name, size, mtime_ns) — regenerating the data
-#   under an sf_dir in-session misses the memo instead of serving stale
-#   checkpoint blocks; non-local paths (no os.stat) fingerprint as
-#   None, i.e. path-only keying, documented weaker;
-# * on every miss, entries from other applications AND same-app entries
-#   superseded by a new fingerprint for the same (builder, args) are
-#   evicted. Dropping the dict reference is the release mechanism:
-#   localCheckpoint blocks are owned by the RDD object, and Spark's
-#   ContextCleaner frees them when the Python/JVM reference is
-#   garbage-collected (stopped sessions free everything regardless);
-# * ``invalidate_graph_memo()`` is the explicit hook for callers that
-#   mutate data mid-session and want the blocks dropped immediately.
-#
-# Each query standalone still derives everything from scratch —
-# per-query oracle independence is untouched.
-_MEMO: dict = {}
-
-# Fingerprint cache: walking + stat-ing every parquet file under sf_dir
-# on EVERY _memoized call (including hits) is per-query driver latency
-# that grows with file count and is expensive on slow filesystems. The
-# listing is re-checked at most once per _FP_TTL seconds per sf_dir;
-# mutations inside the window are served stale until the TTL lapses or
-# ``invalidate_graph_memo()`` (the documented escape hatch) is called.
-_FP_CACHE: dict = {}
-_FP_TTL = 30.0
-
-
 def invalidate_graph_memo() -> None:
-    """Drop every memoized frame (test hooks, data-regeneration flows)."""
-    _MEMO.clear()
-    _FP_CACHE.clear()
-
-
-def _source_fingerprint(sf_dir: str):
-    """Order-free digest of the sf_dir parquet listing, or None when the
-    path is not driver-stat-able (object store) — key degrades to
-    path-only for those. An empty-but-statable directory gets its own
-    sentinel (distinct from un-statable) so files appearing later miss
-    the memo. The digest is a content md5, never Python's salted
-    hash(), so it would stay meaningful even if a key ever escaped the
-    process. Cached per sf_dir for _FP_TTL seconds."""
-    now = time.monotonic()
-    hit = _FP_CACHE.get(sf_dir)
-    if hit is not None and now - hit[0] < _FP_TTL:
-        return hit[1]
-    try:
-        entries = []
-        for root, _dirs, files in os.walk(sf_dir):
-            for f in files:
-                if f.endswith(".parquet") and not f.startswith((".", "_")):
-                    st = os.stat(os.path.join(root, f))
-                    entries.append(
-                        (os.path.relpath(os.path.join(root, f), sf_dir),
-                         st.st_size, st.st_mtime_ns)
-                    )
-        if not entries:
-            fp = "empty" if os.path.isdir(sf_dir) else None
-        else:
-            fp = hashlib.md5(
-                repr(sorted(entries)).encode()
-            ).hexdigest()
-    except OSError:
-        fp = None
-    _FP_CACHE[sf_dir] = (now, fp)
-    return fp
-
-
-def _memoized(spark, key, build):
-    app = spark.sparkContext.applicationId
-    fp = _source_fingerprint(key[1]) if len(key) > 1 else None
-    k = (app, fp) + key
-    hit = _MEMO.get(k)
-    if hit is not None:
-        return hit
-    for stale in [
-        m
-        for m in _MEMO
-        if m[0] != app or (m[2:] == key and m[1] != fp)
-    ]:
-        del _MEMO[stale]
-    df = build()
-    _MEMO[k] = df
-    return df
+    """No-op kept for callers written against the removed session memo:
+    every graph query now builds its edge set (and LPA labels) once per
+    call, so there is nothing to invalidate."""
 
 
 def _edges_df(spark, sf_dir, directed: bool = False):
@@ -195,41 +102,15 @@ def _edges_df(spark, sf_dir, directed: bool = False):
     LSH band buckets, localCheckpointed because every graph algorithm
     reads the edge set repeatedly (and the iterative ones need flat
     lineage). The band modulus is a broadcast column from sizing_df —
-    no data-dependent literal, no plan-build job. Memoized per
-    (session, sf_dir, directed)."""
-    return _memoized(
-        spark,
-        ("edges", sf_dir, directed),
-        lambda: _build_edges_df(spark, sf_dir, directed),
-    )
+    no data-dependent literal, no plan-build job. Built once per query
+    call; a caller that wants reuse holds the returned frame.
 
-
-def _edges_count(spark, sf_dir, directed: bool = False) -> int:
-    """Cached count of the memoized edge frame (VERDICT r8 #3): the
-    frame is localCheckpointed so counting is one cheap job, but
-    consumers that only need the number for a broadcast-size gate
-    shouldn't pay even that per call — one job per session."""
-    return _memoized(
-        spark,
-        ("edges_count", sf_dir, directed),
-        lambda: _edges_df(spark, sf_dir, directed).count(),
-    )
-
-
-def _build_edges_df(spark, sf_dir, directed: bool):
-    """Round 13 (after the bench-memo fix made the build's cost honest —
-    it is paid by every graph query run): the round-12 shape ran the
-    bucket kernel up to SIX times per build (the two-band union replanned
-    ``bk`` twice, and the unmaterialized ``bands`` union fed the size
-    aggregate plus both self-join sides) and shuffled the band table
-    three times (size aggregate, two join legs). Now: ONE kernel pass
-    (the two band values leave the row via posexplode, no union), one
-    groupBy collecting each bucket's members (the same exchange the size
-    aggregate used — the cap filter reads size(ns), so the sz frame and
-    the bands⋈sz join are GONE), and the pairs explode map-side from the
-    ≤BUCKET_CAP-bounded sorted member arrays. Guide §2.4 (remove
-    shuffles), §1.2 (don't recompute). Per-bucket state is ≤ BUCKET_CAP
-    ids, the explode ≤ CAP·(CAP−1)/2 pairs — bounded at any corpus size.
+    ONE kernel pass (the two band values leave the row via posexplode,
+    no union), one groupBy collecting each bucket's members (the cap
+    filter reads size(ns), so no separate size aggregate or join), and
+    the pairs explode map-side from the ≤BUCKET_CAP-bounded sorted
+    member arrays. Per-bucket state is ≤ BUCKET_CAP ids, the explode
+    ≤ CAP·(CAP−1)/2 pairs — bounded at any corpus size.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     szp = sizing_df(emb, TARGET_BUCKET, BAND_BITS_MIN, BAND_BITS_MAX)
@@ -576,8 +457,8 @@ RA_TOPK = 20
 # (2 longs/row) ≈ ~130 MB as a driver HashedRelation — comfortably
 # inside a production driver, far outside trouble. Above it the
 # anti-join falls back to a shuffled equi-join (AQE may still promote
-# it back if runtime stats allow). The count is read off the memoized
-# localCheckpointed edge frame, so the gate costs one cached-count job.
+# it back if runtime stats allow). The count is read off the
+# localCheckpointed edge frame, so the gate costs one count job.
 RA_EDGE_BCAST_MAX = 2_000_000
 # The b-side wedge frame (binv) is 2·|E| rows × 3 longs — 3× the raw
 # bytes of the 2-long edge frame the bound above was calibrated for
@@ -621,7 +502,7 @@ RA_BINV_BCAST_MAX = RA_EDGE_BCAST_MAX // 3
 def link_prediction_ra(spark, sf_dir):
     """Round-9 plan (VERDICT r8 #3; same result set, ~3x faster):
 
-    * wedge stage explicitly ``repartition(P, z)`` — the memoized
+    * wedge stage explicitly ``repartition(P, z)`` — the
       localCheckpointed edge frame arrives in a handful of partitions
       (AQE coalesced the distinct() that built it), which starved the
       16.9M-wedge fan-out down to 2 tasks at sf0.1; the 2·|E|-row
@@ -634,15 +515,14 @@ def link_prediction_ra(spark, sf_dir):
       adjacency is a property of the pair, independent of z, so
       filtering pairs ≡ filtering wedges, and the anti-join now probes
       ~1.9M aggregated pairs instead of ~17M wedges (sf0.1 counts);
-    * the broadcast-size gate reads the session-memoized edge count
-      (``_edges_count``) instead of running a count job per call, and
-      gates ALL the small-side broadcasts (deg, b-side, edges) — over
+    * the broadcast-size gate counts the localCheckpointed edge frame
+      (one job per call) and gates ALL the small-side broadcasts (deg, b-side, edges) — over
       the bound every join falls back to a shuffled equi-join.
     """
     from pyspark.sql import Window
 
     e = _edges_df(spark, sf_dir)
-    n_edges = _edges_count(spark, sf_dir)
+    n_edges = e.count()
     small = n_edges <= RA_EDGE_BCAST_MAX
     bc = F.broadcast if small else (lambda df: df)
     # binv is the doubled undirected frame with inv_d attached (3× the
@@ -925,17 +805,8 @@ def _lpa_labels(spark, sf_dir):
     after LPA_ROUNDS synchronous rounds — shared by the community query
     and the modularity audit. directed=True edges yield both
     orientations of each unordered pair, so joining on dst gathers
-    every neighbor's label for src. Memoized per (session, sf_dir,
-    rounds) — the rounds end in localCheckpoint, so the memo hands the
-    second consumer the already-materialized table."""
-    return _memoized(
-        spark,
-        ("lpa", sf_dir, LPA_ROUNDS),
-        lambda: _build_lpa_labels(spark, sf_dir),
-    )
-
-
-def _build_lpa_labels(spark, sf_dir):
+    every neighbor's label for src. Each round ends in localCheckpoint,
+    so lineage stays flat across rounds."""
     emb = load_table(spark, sf_dir, "embeddings")
     edges = _edges_df(spark, sf_dir, directed=True)
     labels = emb.select(

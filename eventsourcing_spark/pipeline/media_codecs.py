@@ -385,14 +385,16 @@ def decode_avi(data: bytes) -> dict:
 # 100 TB cost left in the media family. The swap was previously prose
 # ("at production scale replace with PIL/libvips"); this makes it a
 # CONSTRUCTOR ARGUMENT: a MediaCodec bundles the seven kernel
-# functions, the stdlib implementation is the default, and
-# ``set_media_codec()`` (or the ``media_codec=`` argument the pipeline
-# entry points accept) swaps in a native-backed instance per session.
+# functions, the batch-vectorized codec (``media_codecs_batch``) is the
+# runtime default, the stdlib instance below is the byte-level
+# reference, and ``set_media_codec()`` (or the ``media_codec=`` argument
+# the pipeline entry points accept) swaps in another instance per
+# session.
 #
 # Worker-closure contract: pipeline functions resolve the ACTIVE codec
 # once at plan-build time on the driver and capture the bound functions
-# in their Arrow-batch closures. The stdlib default ships by value
-# (this module is registered for by-value pickling above); a custom
+# in their Arrow-batch closures. The built-in codecs ship by value
+# (their modules are registered for by-value pickling); a custom
 # codec's functions pickle under their own module's rules — a
 # PIL/libvips-backed codec therefore needs its library installed on
 # the executors, which is exactly the deployment reality the seam
@@ -470,52 +472,31 @@ def resample_nearest_many(codec: "MediaCodec", items: list) -> list:
 STDLIB_CODEC = MediaCodec()
 
 
-def _default_codec() -> MediaCodec:
-    """The batch-vectorized codec when numpy imports cleanly (it is a
-    baked dependency of this engine's Arrow paths — VERDICT r9 #4 /
-    r10 #1), else the numpy single-image codec, else the dependency-
-    free stdlib reference. All produce identical bytes (the seam tests
-    compare them kernel by kernel)."""
-    try:
+def get_media_codec() -> MediaCodec:
+    """The session-active codec (driver-side resolution point).
+
+    The default is the batch-vectorized codec (numpy is a baked
+    dependency of this engine's Arrow paths, so a broken numpy fails
+    here, loudly). It is installed LAZILY on first call only because
+    ``media_codecs_batch`` imports this module: resolving at import
+    time would hit the circular import."""
+    global _ACTIVE_CODEC
+    if _ACTIVE_CODEC is None:
         from eventsourcing_spark.pipeline.media_codecs_batch import (
             BATCH_CODEC,
         )
 
-        return BATCH_CODEC
-    except Exception:  # noqa: BLE001 — numpy genuinely absent/broken
-        pass
-    try:
-        from eventsourcing_spark.pipeline.media_codecs_np import (
-            NUMPY_CODEC,
-        )
-
-        return NUMPY_CODEC
-    except Exception:  # noqa: BLE001
-        return STDLIB_CODEC
-
-
-def get_media_codec() -> MediaCodec:
-    """The session-active codec (driver-side resolution point).
-
-    The environment default is resolved LAZILY on first call (r10
-    ADVICE): resolving at import time made the choice import-order
-    dependent — importing media_codecs_np/_batch first hits this
-    module mid-initialization, the circular import raises, and the
-    blanket except silently left the stdlib codec active despite
-    numpy being available."""
-    global _ACTIVE_CODEC
-    if _ACTIVE_CODEC is None:
-        _ACTIVE_CODEC = _default_codec()
+        _ACTIVE_CODEC = BATCH_CODEC
     return _ACTIVE_CODEC
 
 
 def set_media_codec(codec: MediaCodec | None) -> MediaCodec:
     """Install ``codec`` for subsequent plan builds (None = restore the
-    environment default — batch/numpy-backed where numpy is available).
-    Returns the PREVIOUS codec so callers can restore it."""
+    default batch codec). Returns the PREVIOUS codec so callers can
+    restore it."""
     global _ACTIVE_CODEC
     prev = get_media_codec()
-    _ACTIVE_CODEC = codec if codec is not None else _default_codec()
+    _ACTIVE_CODEC = codec  # None: the next get_media_codec() reinstalls it
     return prev
 
 

@@ -36,9 +36,10 @@ is to amortize that per-call cost across the WHOLE Arrow batch:
   per-image source-index tables (padded indices clipped in-range and
   sliced away afterwards).
 
-Byte identity with the stdlib reference is fuzz-pinned for mixed-size,
-mixed-channel batches in tests/test_media_codec_seam.py, and the gate
-queries run green under stdlib, numpy, and batch codecs alike.
+This is the runtime codec (:func:`media_codecs.get_media_codec`'s
+default). Byte identity with the stdlib reference is fuzz-pinned for
+mixed-size, mixed-channel batches in tests/test_media_codec_seam.py,
+and the gate queries return identical rows under both codecs.
 
 Memory discipline: batches are grouped by channel count, sorted by
 (height, stride) and chunked so no stacked intermediate exceeds

@@ -1,12 +1,13 @@
-"""numpy-vectorized MediaCodec (VERDICT r9 #4).
+"""numpy-vectorized per-item media kernels of the batch codec.
 
 The pure-stdlib codecs in :mod:`media_codecs` are correct but carry a
 per-byte Python-loop constant — the media family was the battery's
 densest cost block (phash 3.6 s + video 3.6 s + resize 2.0 s + audio
-1.5 s; media_resize 9.7× at the 20× stress). This module is the first
-real user of the round-9 codec seam: the same seven kernels, BYTE-FOR-
-BYTE identical outputs (same filter-type cycling, same zlib level,
-same exceptions on unsupported input), with the hot loops moved into
+1.5 s; media_resize 9.7× at the 20× stress). This module holds the
+per-item kernels of :data:`media_codecs_batch.BATCH_CODEC` — they serve
+groups below its ``MIN_BATCH`` and WAV — with BYTE-FOR-BYTE identical
+outputs to the stdlib reference (same filter-type cycling, same zlib
+level, same exceptions on unsupported input), the hot loops moved into
 numpy array ops:
 
 * **PNG encode** — all five scanline filters are pure functions of the
@@ -28,27 +29,22 @@ numpy array ops:
   it) is preserved via ``tolist()``. WAV ENCODE stays stdlib — see the
   note at its definition.
 * **AVI** — container demux is header parsing + frame slicing (no
-  per-byte loop); the stdlib functions are reused as-is.
+  per-byte loop); the batch codec reuses the stdlib functions as-is.
 
 **Size-adaptive routing (measured, round 10):** numpy's fixed per-call
 cost loses to the stdlib byte loops below ~1-2k pixels — and the gate's
 fixtures are 16-22 px thumbnails (encode 119 µs stdlib vs 206 µs pure-
 numpy at 18×19, flipping to 3.2 ms vs 14.9 ms at 256×256). The PNG
 kernels therefore delegate to the stdlib reference below a measured
-pixel threshold, making the numpy codec ≥ stdlib at every size while
+pixel threshold, making these kernels ≥ stdlib at every size while
 the big-image wins (4.7× encode, 36× resample, 1.4× decode) remain.
-The consequence stated honestly: at the GATE's thumbnail scale the
-per-image codec constant is not numpy-beatable one image at a time —
-the ≥3× path there is batch-stacked vectorization (pad the Arrow
-batch's images to common dims and run each filter row across all
-images at once; the y % 5 filter schedule is shared by construction),
-which changes the seam to an optional batch kernel and is specced for
-the next round.
+At the GATE's thumbnail scale the per-image constant is not numpy-
+beatable one image at a time — the batch codec's stacked kernels
+(pad the Arrow batch's images to common dims and run each filter row
+across all images at once) are the path there.
 
-Selected automatically by :func:`media_codecs.get_media_codec` when
-numpy imports cleanly (it is a baked dependency of this engine's Arrow
-paths); the stdlib codec remains the dependency-free fallback and the
-behavioral reference — the seam tests run both and compare bytes.
+The stdlib codec is the behavioral reference — the seam tests fuzz
+these kernels against it byte for byte.
 """
 
 from __future__ import annotations
@@ -60,13 +56,9 @@ import zlib
 import numpy as np
 
 from eventsourcing_spark.pipeline.media_codecs import (
-    AVI_MAGIC,  # noqa: F401 — re-exported for symmetry
     PNG_MAGIC,
     WAV_MAGIC,
-    MediaCodec,
     _chunk,
-    decode_avi,
-    encode_avi,
     encode_wav,
 )
 from eventsourcing_spark.pipeline.media_codecs import (
@@ -322,15 +314,3 @@ def decode_wav_np(data: bytes) -> dict:
         "samples": samples,
         "raw": raw,
     }
-
-
-NUMPY_CODEC = MediaCodec(
-    name="numpy",
-    decode_png=decode_png_np,
-    encode_png=encode_png_np,
-    resample_nearest=resample_nearest_np,
-    decode_wav=decode_wav_np,
-    encode_wav=encode_wav_np,
-    decode_avi=decode_avi,  # container demux has no per-byte loop
-    encode_avi=encode_avi,
-)

@@ -251,48 +251,28 @@ def test_bfs_hops_are_consistent(spark):
             assert abs(a - b) <= 1
 
 
-def test_graph_memo_fingerprints_and_invalidation(spark, tmp_path):
-    """Memo misses when the data under sf_dir changes (mtime/size), and
-    the explicit invalidation hook clears everything."""
-    import os
-    import time
+def test_edges_follow_data_regenerated_mid_session(spark, sf_dir, tmp_path):
+    """Rewriting the data under an sf_dir in-session must change what the
+    next graph query sees: the edges of a regenerated directory equal
+    those of a fresh directory holding the same new data."""
+    import shutil
 
-    import eventsourcing_spark.pipeline.graph as g
+    import pyarrow.parquet as pq
 
-    d = str(tmp_path / "sfX")
-    os.makedirs(d)
-    p = os.path.join(d, "embeddings.parquet")
-    with open(p, "wb") as f:
-        f.write(b"v1-bytes")
+    from eventsourcing_spark.pipeline.graph import _edges_df
 
-    calls = {"n": 0}
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    for d in (a, b):
+        shutil.copytree(sf_dir, d, copy_function=shutil.copyfile)
 
-    def build():
-        calls["n"] += 1
-        return object()
+    def edges(d):
+        return sorted(map(tuple, _edges_df(spark, d).collect()))
 
-    g.invalidate_graph_memo()
-    a = g._memoized(spark, ("edges", d, False), build)
-    b = g._memoized(spark, ("edges", d, False), build)
-    assert a is b and calls["n"] == 1
-
-    time.sleep(0.01)
-    with open(p, "wb") as f:  # regenerate the data in-session
-        f.write(b"v2-bytes!")
-    # the fingerprint is TTL-cached (round-8 ADVICE: don't re-walk the
-    # listing on every hit) — inside the TTL the memo serves stale...
-    c = g._memoized(spark, ("edges", d, False), build)
-    assert c is a and calls["n"] == 1
-    # ...and expiring the cache (simulating TTL lapse) re-fingerprints
-    # and misses; invalidate_graph_memo() is the immediate escape hatch.
-    g._FP_CACHE.clear()
-    c = g._memoized(spark, ("edges", d, False), build)
-    assert c is not a and calls["n"] == 2
-    # the superseded entry was evicted, not just shadowed
-    assert sum(1 for k in g._MEMO if k[2:] == ("edges", d, False)) == 1
-
-    g.invalidate_graph_memo()
-    assert g._MEMO == {}
-    g._memoized(spark, ("edges", d, False), build)
-    assert calls["n"] == 3
-    g.invalidate_graph_memo()
+    before = edges(a)
+    for d in (a, b):
+        p = f"{d}/embeddings.parquet"
+        t = pq.read_table(p)
+        pq.write_table(t.slice(0, t.num_rows // 2), p)
+    after = edges(a)
+    assert after == edges(b)
+    assert after != before

@@ -2,12 +2,11 @@
 
 The stdlib codecs carry a Python-loop constant; production swaps in a
 native-backed MediaCodec per session. These tests pin the seam: the
-environment default is the numpy-vectorized codec (stdlib when numpy
-is absent — round 10), ``set_media_codec`` routes every pipeline
-decode/encode through the installed instance (verified with a counting
-wrapper), results are identical whenever the installed codec honors
-the contract, and the numpy codec is byte-identical to the stdlib
-reference kernel by kernel.
+default is the batch-stacked codec, ``set_media_codec`` routes every
+pipeline decode/encode through the installed instance (verified with a
+counting wrapper), results are identical whenever the installed codec
+honors the contract, and the batch codec and its numpy per-item
+kernels are byte-identical to the stdlib reference kernel by kernel.
 """
 
 from __future__ import annotations
@@ -73,28 +72,23 @@ def _marker_counts(marker_dir: str) -> dict:
     return out
 
 
-def test_default_codec_is_batch_with_stdlib_fallback():
-    """Since round 11 the environment default is the batch-stacked
-    codec whenever numpy imports (VERDICT r10 #1); the stdlib codec
-    remains the dependency-free fallback and behavioral reference."""
-    c = get_media_codec()
-    try:
-        from eventsourcing_spark.pipeline.media_codecs_batch import (
-            BATCH_CODEC,
-        )
+def test_runtime_codec_is_batch():
+    """The runtime default is the batch-stacked codec, with no fallback
+    chain (numpy is a baked dependency, so a broken numpy fails loudly);
+    the stdlib codec stays the behavioral reference."""
+    from eventsourcing_spark.pipeline.media_codecs_batch import BATCH_CODEC
 
-        assert c is BATCH_CODEC and c.name == "batch"
-        assert c.decode_png_batch is not None
-        assert c.encode_png_batch is not None
-    except ImportError:
-        assert c is STDLIB_CODEC and c.name == "stdlib"
-    # the stdlib reference stays intact and importable either way
+    c = get_media_codec()
+    assert c is BATCH_CODEC and c.name == "batch"
+    assert c.decode_png_batch is not None
+    assert c.encode_png_batch is not None
+    # the stdlib reference stays intact
     assert STDLIB_CODEC.decode_png is decode_png
     assert STDLIB_CODEC.encode_png is encode_png
     assert STDLIB_CODEC.decode_png_batch is None  # no batch kernels
 
 
-def test_default_codec_resolution_is_lazy_and_import_order_proof():
+def test_runtime_codec_resolution_is_lazy_and_import_order_proof():
     """r10 ADVICE: the default must not depend on module import order —
     get_media_codec() resolves lazily, so even after a set/reset cycle
     the default is re-derived, never a stale import-time snapshot."""
@@ -195,11 +189,12 @@ def test_broken_codec_surfaces_loudly(spark):
 
 
 # --------------------------------------------------------------------------
-# numpy codec (VERDICT r9 #4): byte parity with the stdlib reference,
-# and gate-query identity under BOTH codecs.
+# numpy per-item kernels (the batch codec's small-group and WAV path):
+# byte parity with the stdlib reference, and gate-query identity under
+# both codecs.
 # --------------------------------------------------------------------------
 def test_numpy_codec_byte_parity_fuzz():
-    """Every kernel of the numpy codec must be BYTE-identical to the
+    """Every numpy per-item kernel must be BYTE-identical to the
     stdlib reference — encodes, decodes (all five PNG filter paths via
     the y%5 cycling), resamples, WAV packing, and the out-of-range
     error contract."""
@@ -250,21 +245,20 @@ def test_numpy_codec_byte_parity_fuzz():
 )
 def test_gate_queries_identical_under_all_codecs(spark, sf_dir, qname):
     """The four headline media queries return IDENTICAL rows under the
-    stdlib, numpy, and batch codecs — all three stay green in CI."""
+    stdlib reference and the batch runtime codec."""
     from eventsourcing_spark.pipeline.media_codecs import STDLIB_CODEC
     from eventsourcing_spark.pipeline.media_codecs_batch import BATCH_CODEC
-    from eventsourcing_spark.pipeline.media_codecs_np import NUMPY_CODEC
     from eventsourcing_spark.registry import SPARK_QUERIES
 
     q = SPARK_QUERIES[qname]
     rows = {}
-    for codec in (STDLIB_CODEC, NUMPY_CODEC, BATCH_CODEC):
+    for codec in (STDLIB_CODEC, BATCH_CODEC):
         set_media_codec(codec)
         try:
             rows[codec.name] = sorted(map(tuple, q(spark, sf_dir).collect()))
         finally:
             set_media_codec(None)
-    assert rows["stdlib"] == rows["numpy"] == rows["batch"]
+    assert rows["stdlib"] == rows["batch"]
     assert rows["stdlib"], f"{qname} returned no rows at this sf"
 
 

@@ -1,4 +1,4 @@
-"""Round-12 optimization profiler: isolated per-query timing + plan capture.
+"""Optimization profiler: isolated per-query timing + plan capture.
 
 Mirrors bench.py methodology exactly (sf0.001 warm-up for codegen cache,
 then best-of-N noop-sink runs at the target SF) so numbers are comparable
@@ -23,7 +23,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from eventsourcing_spark.pipeline.graph import invalidate_graph_memo
 from eventsourcing_spark.registry import SPARK_QUERIES
 from eventsourcing_spark.session import get_spark
 
@@ -68,9 +67,6 @@ def main() -> int:
                     df._jdf.queryExecution(), "formatted"))
         best = float("inf")
         for i in range(args.reps):
-            # match bench.py round-13 methodology: no graph-memo reuse
-            # across timed runs (VERDICT r12 #1)
-            invalidate_graph_memo()
             spark.sparkContext.setJobDescription(f"timed:{name}#{i}")
             t0 = time.time()
             fn(spark, args.sf).write.format("noop").mode("overwrite").save()
