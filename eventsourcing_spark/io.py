@@ -125,17 +125,10 @@ _BYTES_PER_PARTITION = 256 * 1024
 #
 # All three stay size-derived and capped at defaultParallelism
 # (ensure_parallelism): at 100 TB the scan already yields thousands of
-# partitions and every tier is a plan-time no-op. Env-overridable so
-# deployments can retune without a code change.
-TEXT_KERNEL_BYTES = int(
-    os.environ.get("SPARK_GRAFT_TEXT_KERNEL_BYTES", 32 * 1024)
-)
-TEXT_KERNEL_BYTES_MID = int(
-    os.environ.get("SPARK_GRAFT_TEXT_KERNEL_BYTES_MID", 64 * 1024)
-)
-TEXT_KERNEL_BYTES_WIDE = int(
-    os.environ.get("SPARK_GRAFT_TEXT_KERNEL_BYTES_WIDE", 128 * 1024)
-)
+# partitions and every tier is a plan-time no-op.
+TEXT_KERNEL_BYTES = 32 * 1024
+TEXT_KERNEL_BYTES_MID = 64 * 1024
+TEXT_KERNEL_BYTES_WIDE = 128 * 1024
 
 
 def ensure_parallelism(

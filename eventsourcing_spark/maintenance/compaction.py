@@ -9,19 +9,18 @@ analog of the reference's ``(id, migration)`` index
 (store/postgresql/store.go:699-701), done with file layout instead of
 a btree. On Delta this is OPTIMIZE + ZORDER BY (id).
 
-Round-3 hardening: the rewrite is VERIFIED before the directory swap —
-the new frame's (row count, order-free id fingerprint) must equal the
-live table's, else compaction aborts with the store untouched — and the
-call returns file/row statistics for operational monitoring.
+The rewrite goes through ``EventStore._rewrite_table`` under the
+store's commit lock, like every maintenance rewrite: the new layout is
+VERIFIED before the directory swap — its (row count, order-free id
+fingerprint) must equal the live table's, else compaction aborts with
+the store untouched — and appends made meanwhile wait for the swap
+instead of landing in the directory being replaced. The call returns
+file/row statistics for operational monitoring.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
-
-from pyspark.sql import functions as F
 
 from eventsourcing_spark.store.event_store import EventStore
 
@@ -37,57 +36,18 @@ def _dir_stats(path: str) -> tuple[int, int]:
     return n, size
 
 
-def _fingerprint(df) -> tuple[int, int]:
-    """(row_count, order-free id fingerprint): sum of 40-bit md5 slices
-    — commutative, so layout/order-independent (corpus_fingerprint
-    idiom)."""
-    fp = F.conv(F.substring(F.md5(F.col("id")), 1, 10), 16, 10).cast("long")
-    row = df.agg(
-        F.count("*").alias("n"), F.coalesce(F.sum(fp), F.lit(0)).alias("s")
-    ).first()
-    return int(row.n), int(row.s)
-
-
 def compact_events(store: EventStore, files_per_bucket: int = 1) -> dict:
     """Compact the events table. Returns ``{files_before, files_after,
-    bytes, rows}``; no-op (no swap) on an empty table."""
+    bytes, rows}``; no-op (no swap) on a table without data files."""
     events_dir = store._events_dir
-    if not os.path.isdir(events_dir):
-        return {"files_before": 0, "files_after": 0, "bytes": 0, "rows": 0}
-    files_before, total_bytes = _dir_stats(events_dir)
-
-    ev = store.events_raw().withColumn(
-        "bucket", F.pmod(F.col("aggregate_id_hash"), F.lit(store.n_buckets))
-    )
-    n_rows, fp = _fingerprint(ev)
-    if n_rows == 0:
-        return {
-            "files_before": files_before,
-            "files_after": files_before,
-            "bytes": total_bytes,
-            "rows": 0,
-        }
-    compacted = ev.repartition(
-        store.n_buckets * files_per_bucket, "bucket"
-    ).sortWithinPartitions("id")
-
-    # materialize to a sibling temp dir and verify BEFORE swapping
-    tmp = f"{events_dir}.compact-{uuid.uuid4().hex[:8]}"
-    compacted.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    new = store.spark.read.parquet(tmp)
-    n_new, fp_new = _fingerprint(new)
-    if (n_new, fp_new) != (n_rows, fp):
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"compaction verification failed: rows {n_rows}->{n_new}, "
-            f"fingerprint {fp}->{fp_new}; store left untouched"
+    with store._commit_lock():
+        files_before, total_bytes = _dir_stats(events_dir)
+        if files_before == 0:
+            return {"files_before": 0, "files_after": 0, "bytes": 0, "rows": 0}
+        n_rows = store._rewrite_table(
+            "events", store.events_raw(), files_per_bucket=files_per_bucket
         )
-    old = f"{events_dir}.old-{uuid.uuid4().hex[:8]}"
-    os.rename(events_dir, old)
-    os.rename(tmp, events_dir)
-    shutil.rmtree(old, ignore_errors=True)
-
-    files_after, _ = _dir_stats(events_dir)
+        files_after, _ = _dir_stats(events_dir)
     return {
         "files_before": files_before,
         "files_after": files_after,

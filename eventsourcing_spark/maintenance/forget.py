@@ -3,8 +3,9 @@
 
 For a target ``(aggregate_id, kind)`` the reference decodes each body,
 runs a user scrubber, re-encodes, and UPDATEs the row — events and all
-the aggregate's snapshots. Here: one distributed rewrite per table; the
-scrubber runs as an Arrow-batched pandas UDF on matching rows only,
+the aggregate's snapshots — in one transaction. Here: one verified
+``EventStore._rewrite_table`` per table under the store's commit lock;
+the scrubber runs as an Arrow-batched pandas UDF on matching rows only,
 everything else passes through untouched.
 """
 
@@ -16,7 +17,6 @@ from collections.abc import Callable
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from eventsourcing_spark.maintenance.rewrite import overwrite_dir
 from eventsourcing_spark.store.event_store import EventStore
 
 Scrubber = Callable[[str, dict], dict]  # (kind, body) -> scrubbed body
@@ -49,22 +49,20 @@ def forget(
     test/pg/store_test.go:373-482)."""
     scrub = _scrub_udf(event_scrubber)
     match = (F.col("aggregate_id") == aggregate_id) & F.col("kind").isin(list(kinds))
-    ev = store.events_raw().withColumn(
-        "body", F.when(match, scrub("kind", "body")).otherwise(F.col("body"))
-    )
-    ev = ev.withColumn(
-        "bucket", F.pmod(F.col("aggregate_id_hash"), F.lit(store.n_buckets))
-    )
-    overwrite_dir(ev, store._events_dir, partition_by=["bucket"])
-
-    snaps = store.snapshots()
-    if snaps.limit(1).count():
-        snap_scrub = _scrub_udf(snapshot_scrubber or event_scrubber)
-        smatch = F.col("aggregate_id") == aggregate_id
-        out = snaps.withColumn(
-            "body",
-            F.when(smatch, snap_scrub("aggregate_kind", "body")).otherwise(
-                F.col("body")
-            ),
+    with store._commit_lock():
+        ev = store.events_raw().withColumn(
+            "body", F.when(match, scrub("kind", "body")).otherwise(F.col("body"))
         )
-        overwrite_dir(out, store._snapshots_dir)
+        store._rewrite_table("events", ev)
+
+        snaps = store.snapshots()
+        if snaps.limit(1).count():
+            snap_scrub = _scrub_udf(snapshot_scrubber or event_scrubber)
+            smatch = F.col("aggregate_id") == aggregate_id
+            out = snaps.withColumn(
+                "body",
+                F.when(smatch, snap_scrub("aggregate_kind", "body")).otherwise(
+                    F.col("body")
+                ),
+            )
+            store._rewrite_table("snapshots", out)

@@ -15,6 +15,12 @@ is literally UDTF-shaped — one stream in, N events out
 grouped-map: shuffle once on aggregate_id, transform every stream in
 parallel, no driver involvement.
 
+The whole pass runs under the store's commit lock and writes through
+``EventStore._rewrite_table`` (verified temp-directory swap): a writer
+that read the stream before the migration waits for the swap, then
+collides with the guard's version — the reference's transaction
+semantics (events_migration.go:96-110).
+
 Golden acceptance: test/pg/store_test.go:484-633 — a 4-event stream
 becomes 9 rows (v1-4 migration=rev, v5 Invalidated, v6-9 migrated
 ``_V2`` bodies).
@@ -28,7 +34,6 @@ from datetime import datetime, timezone
 
 from pyspark.sql import functions as F
 
-from eventsourcing_spark.maintenance.rewrite import overwrite_dir
 from eventsourcing_spark.schema import EVENT_SCHEMA
 from eventsourcing_spark.store.event_store import EventStore
 from eventsourcing_spark.io import materialize
@@ -51,8 +56,17 @@ def migrate_in_place(
     """Copy-replace migrate every stream of ``aggregate_kind`` whose
     history contains any of ``target_kinds``. Returns #streams migrated.
     """
-    now = now or datetime.now(timezone.utc)
-    new_kind = new_aggregate_kind or aggregate_kind
+    with store._commit_lock():
+        return _migrate_locked(
+            store, revision, aggregate_kind, target_kinds, handler,
+            new_aggregate_kind or aggregate_kind,
+            now or datetime.now(timezone.utc),
+        )
+
+
+def _migrate_locked(
+    store, revision, aggregate_kind, target_kinds, handler, new_kind, now
+) -> int:
     created_naive = now.replace(tzinfo=None)
 
     events = store.events()
@@ -168,7 +182,7 @@ def migrate_in_place(
     snaps = store.snapshots()
     if snaps.limit(1).count():
         remaining = snaps.join(candidates, "aggregate_id", "left_anti")
-        overwrite_dir(remaining, store._snapshots_dir)
+        store._rewrite_table("snapshots", remaining)
 
     # 1) UPDATE old generation: migration = rev WHERE migration = 0
     #    (events_migration.go:123-127) — left-semi against candidates
@@ -188,8 +202,5 @@ def migrate_in_place(
         )
         .drop("_mig_id")
     )
-    combined = marked.unionByName(new_gen).withColumn(
-        "bucket", F.pmod(F.col("aggregate_id_hash"), F.lit(store.n_buckets))
-    )
-    overwrite_dir(combined, store._events_dir, partition_by=["bucket"])
+    store._rewrite_table("events", marked.unionByName(new_gen))
     return n_streams

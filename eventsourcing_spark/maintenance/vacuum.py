@@ -8,23 +8,22 @@ eventually reclaim: ``vacuum_migrated`` rewrites the events table
 keeping only ``migration = 0`` rows plus the last ``keep_revisions``
 invalidated generations (0 = drop all superseded rows).
 
-Same safety discipline as compaction: the retained frame is verified
-(row count + order-free id fingerprint of the rows that MUST survive)
-against the live table before the directory swap; a mismatch aborts
-with the store untouched. On Delta/Iceberg this is VACUUM after a
-rewrite — and as everywhere in ``maintenance/``, the operator only
-builds DataFrames, so it ports unchanged.
+The rewrite is ``EventStore._rewrite_table`` under the store's commit
+lock, like every maintenance rewrite: the retained frame is verified
+(row count + order-free id fingerprint) against what was written before
+the directory swap — a mismatch aborts with the store untouched — and
+appends made meanwhile wait for the swap. On Delta/Iceberg this is
+VACUUM after a rewrite; the operator only builds DataFrames, so it
+ports unchanged.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import functions as F
 
-from eventsourcing_spark.maintenance.compaction import _dir_stats, _fingerprint
+from eventsourcing_spark.maintenance.compaction import _dir_stats
 from eventsourcing_spark.store.event_store import EventStore
 
 
@@ -38,48 +37,25 @@ def vacuum_migrated(store: EventStore, keep_revisions: int = 0) -> dict:
             "rows_before": 0, "rows_after": 0, "rows_dropped": 0,
             "files_before": 0, "files_after": 0,
         }
-    files_before, _ = _dir_stats(events_dir)
-    ev = store.events_raw()
-    n_before, _ = _fingerprint(ev)
+    with store._commit_lock():
+        files_before, _ = _dir_stats(events_dir)
+        ev = store.events_raw()
+        n_before, max_rev = ev.agg(F.count("*"), F.max("migration")).first()
 
-    if keep_revisions > 0:
-        max_rev = ev.agg(F.max("migration")).first()[0] or 0
-        cutoff = max(0, max_rev - keep_revisions)
-        keep_pred = (F.col("migration") == 0) | (F.col("migration") > cutoff)
-    else:
         keep_pred = F.col("migration") == 0
-    kept = ev.filter(keep_pred).withColumn(
-        "bucket", F.pmod(F.col("aggregate_id_hash"), F.lit(store.n_buckets))
-    )
-    n_keep, fp_keep = _fingerprint(kept)
-    if n_keep == n_before:  # nothing to reclaim — skip the rewrite
-        return {
-            "rows_before": n_before, "rows_after": n_before, "rows_dropped": 0,
-            "files_before": files_before, "files_after": files_before,
-        }
-
-    tmp = f"{events_dir}.vacuum-{uuid.uuid4().hex[:8]}"
-    try:
-        kept.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-        # explicit schema: an all-dropped rewrite (n_keep == 0) leaves a
-        # partitioned dir with no parquet files, where schema INFERENCE
-        # would throw — the same explicit-schema read events_raw() uses
-        new = store.spark.read.schema(kept.schema).parquet(tmp)
-        n_new, fp_new = _fingerprint(new)
-        if (n_new, fp_new) != (n_keep, fp_keep):
-            raise RuntimeError(
-                f"vacuum verification failed: kept rows {n_keep}->{n_new}, "
-                f"fingerprint {fp_keep}->{fp_new}; store left untouched"
-            )
-    except BaseException:
-        # no tmp leak on ANY failure path (write error included)
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    old = f"{events_dir}.old-{uuid.uuid4().hex[:8]}"
-    os.rename(events_dir, old)
-    os.rename(tmp, events_dir)
-    shutil.rmtree(old, ignore_errors=True)
-    files_after, _ = _dir_stats(events_dir)
+        if keep_revisions > 0:
+            cutoff = max(0, (max_rev or 0) - keep_revisions)
+            keep_pred = keep_pred | (F.col("migration") > cutoff)
+        kept = ev.filter(keep_pred)
+        n_keep = kept.count()
+        if n_keep == n_before:  # nothing to reclaim — skip the rewrite
+            return {
+                "rows_before": n_before, "rows_after": n_before,
+                "rows_dropped": 0,
+                "files_before": files_before, "files_after": files_before,
+            }
+        store._rewrite_table("events", kept)
+        files_after, _ = _dir_stats(events_dir)
     return {
         "rows_before": n_before,
         "rows_after": n_keep,

@@ -25,14 +25,20 @@ DataFrame views and conflict-checked parquet appends:
 Storage is a directory of parquet appends. On a production cluster the
 same protocol runs over Delta/Iceberg where the conflict check and the
 append commit atomically; the class isolates that seam in
-``_read_stream`` + ``_append_rows`` so only those two methods change.
-``_read_stream`` serves both the conflict check and the single-key point
-reads (``read_aggregate_events``, ``read_snapshot``), so on a lakehouse
-those reads must see the same table version as the conflict check.
+``_read_stream`` + ``_append_rows`` + ``_rewrite_table`` so only those
+methods change. ``_read_stream`` serves both the conflict check and the
+single-key point reads (``read_aggregate_events``, ``read_snapshot``),
+so on a lakehouse those reads must see the same table version as the
+conflict check. ``_rewrite_table`` is the one table-rewrite path of the
+maintenance operators (forget, migrations, compaction, vacuum): a
+verified temp-directory swap made under the commit lock, so an append
+either lands before the rewrite's scan or waits for the swap and is
+conflict-checked against the rewritten table (the reference runs these
+operators as SQL transactions, store/postgresql/store.go:446-495).
 Partition layout: events are written with a ``bucket`` column =
 ``pmod(aggregate_id_hash, n_buckets)`` and partitioned by it on disk,
 mirroring the reference's split predicate (F3) so split-filtered scans
-prune entire directories.
+prune entire directories. Only this class knows that layout.
 """
 
 from __future__ import annotations
@@ -40,16 +46,41 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import shutil
 import time
+import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from eventsourcing_spark.functions.hashing import fnv1a_32_py, split_predicate
 from eventsourcing_spark.functions.ulid import UlidGenerator
 from eventsourcing_spark.schema import EVENT_SCHEMA, SNAPSHOT_SCHEMA
+
+
+def _arrow_schema(schema) -> pa.Schema:
+    """Arrow twin of a Spark table schema for the driver-side writes, every
+    field nullable (parquet ``optional``, as Spark itself writes them)."""
+    return pa.schema([f.with_nullable(True) for f in to_arrow_schema(schema)])
+
+
+_ARROW_EVENT_SCHEMA = _arrow_schema(EVENT_SCHEMA)
+_ARROW_SNAPSHOT_SCHEMA = _arrow_schema(SNAPSHOT_SCHEMA)
+
+
+def _fingerprint(df: DataFrame) -> tuple[int, int]:
+    """(row_count, order-free id fingerprint): sum of 40-bit md5 slices
+    — commutative, so layout/order-independent (corpus_fingerprint
+    idiom)."""
+    fp = F.conv(F.substring(F.md5(F.col("id")), 1, 10), 16, 10).cast("long")
+    row = df.agg(
+        F.count("*").alias("n"), F.coalesce(F.sum(fp), F.lit(0)).alias("s")
+    ).first()
+    return int(row.n), int(row.s)
 
 
 class ConcurrentModificationError(Exception):
@@ -116,6 +147,7 @@ class EventStore:
         self.n_buckets = n_buckets
         self._events_dir = os.path.join(base_dir, "events")
         self._snapshots_dir = os.path.join(base_dir, "snapshots")
+        self._lock_dir = os.path.join(base_dir, "_commit.lock")
 
     # ------------------------------------------------------------------ views
     def events_raw(self) -> DataFrame:
@@ -415,23 +447,10 @@ class EventStore:
             created_at.replace(tzinfo=None),
             self._restrict_disc(discriminator) or {},
         )
-        import uuid
-
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
         # driver-side single-row write, same rationale as _append_rows
-        schema = pa.schema(
-            [
-                ("id", pa.string()),
-                ("aggregate_id", pa.string()),
-                ("aggregate_version", pa.int32()),
-                ("aggregate_kind", pa.string()),
-                ("body", pa.binary()),
-                ("created_at", pa.timestamp("us", tz="UTC")),
-                ("discriminator", pa.map_(pa.string(), pa.string())),
-            ]
-        )
+        schema = _ARROW_SNAPSHOT_SCHEMA
         table = pa.Table.from_pylist([dict(zip(schema.names, row))], schema=schema)
         os.makedirs(self._snapshots_dir, exist_ok=True)
         pq.write_table(
@@ -442,7 +461,8 @@ class EventStore:
     # -------------------------------------------------------------- internals
     @contextlib.contextmanager
     def _commit_lock(self, timeout_s: float = 60.0):
-        """Serialize conflict-check + append across concurrent writers.
+        """Serialize conflict-check + append across concurrent writers, and
+        appends against the maintenance rewrites (``_rewrite_table``).
 
         ``os.mkdir`` is atomic on POSIX/shared filesystems — the classic
         mutex primitive — so the reference's unique-index guarantee
@@ -451,21 +471,20 @@ class EventStore:
         Delta/Iceberg serializable transaction instead; the reference's
         own distributed locks (dist/lock.go) play the same role there.
         """
-        lock_dir = os.path.join(self.base_dir, "_commit.lock")
         os.makedirs(self.base_dir, exist_ok=True)
         deadline = time.monotonic() + timeout_s
         while True:
             try:
-                os.mkdir(lock_dir)
+                os.mkdir(self._lock_dir)
                 break
             except FileExistsError:
                 if time.monotonic() > deadline:
-                    raise TimeoutError(f"commit lock held too long: {lock_dir}")
+                    raise TimeoutError(f"commit lock held too long: {self._lock_dir}")
                 time.sleep(0.02)
         try:
             yield
         finally:
-            os.rmdir(lock_dir)
+            os.rmdir(self._lock_dir)
 
     def _restrict_disc(
         self, discriminator: dict[str, str] | None
@@ -538,30 +557,6 @@ class EventStore:
         bucket = fnv1a_32_py(aggregate_id) % self.n_buckets
         return os.path.join(self._events_dir, f"bucket={bucket}")
 
-    _ARROW_EVENT_SCHEMA = None
-
-    @classmethod
-    def _arrow_schema(cls):
-        import pyarrow as pa
-
-        if cls._ARROW_EVENT_SCHEMA is None:
-            cls._ARROW_EVENT_SCHEMA = pa.schema(
-                [
-                    ("id", pa.string()),
-                    ("aggregate_id", pa.string()),
-                    ("aggregate_id_hash", pa.int32()),
-                    ("aggregate_version", pa.int32()),
-                    ("aggregate_kind", pa.string()),
-                    ("kind", pa.string()),
-                    ("body", pa.binary()),
-                    ("created_at", pa.timestamp("us", tz="UTC")),
-                    ("migration", pa.int32()),
-                    ("migrated", pa.bool_()),
-                    ("discriminator", pa.map_(pa.string(), pa.string())),
-                ]
-            )
-        return cls._ARROW_EVENT_SCHEMA
-
     def _append_rows(self, rows: list[tuple]) -> None:
         """Driver-side parquet append for the single-key OLTP path.
 
@@ -571,12 +566,9 @@ class EventStore:
         insert, store/sql.go:39-61). Bulk/distributed writes go through
         ``bulk_import`` → ``_append_rows_df`` instead.
         """
-        import uuid
-
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        schema = self._arrow_schema()
+        schema = _ARROW_EVENT_SCHEMA
         table = pa.Table.from_pylist(
             [dict(zip(schema.names, row)) for row in rows], schema=schema
         )
@@ -587,10 +579,69 @@ class EventStore:
         )
 
     def _append_rows_df(self, df: DataFrame) -> None:
-        df = df.withColumn(
+        self._with_bucket(df).write.mode("append").partitionBy("bucket").parquet(
+            self._events_dir
+        )
+
+    def _with_bucket(self, df: DataFrame) -> DataFrame:
+        return df.withColumn(
             "bucket", F.pmod(F.col("aggregate_id_hash"), F.lit(self.n_buckets))
         )
-        df.write.mode("append").partitionBy("bucket").parquet(self._events_dir)
+
+    def _rewrite_table(
+        self, table: str, df: DataFrame, files_per_bucket: int | None = None
+    ) -> int:
+        """Replace the ``events`` or ``snapshots`` table with ``df``; returns
+        its row count. The one rewrite path of the maintenance operators —
+        parquet has no UPDATE/DELETE, so on Delta/Iceberg this method
+        becomes their ``UPDATE``/``MERGE``/``OPTIMIZE`` transaction.
+
+        The caller holds ``_commit_lock`` and builds ``df`` under it:
+        Spark lists the table's files when the frame is built, so a
+        concurrent append either commits before that listing or waits for
+        the swap. ``df`` is written to a sibling temp directory (events
+        bucketed as ``_append_rows_df`` writes them; ``files_per_bucket``
+        shuffles each bucket into that many tasks sorted by ``id``, the
+        compaction layout), read back with the explicit schema, and
+        swapped in only if its (row count, order-free id fingerprint)
+        equals ``df``'s; any failure removes the temp directory and
+        leaves the table untouched.
+        """
+        if not os.path.isdir(self._lock_dir):
+            raise RuntimeError("_rewrite_table needs the commit lock held")
+        path, schema = {
+            "events": (self._events_dir, EVENT_SCHEMA),
+            "snapshots": (self._snapshots_dir, SNAPSHOT_SCHEMA),
+        }[table]
+        df = df.select(*schema.names)
+        expected = _fingerprint(df)
+        tmp = f"{path}.rewrite-{uuid.uuid4().hex[:8]}"
+        try:
+            if table == "events":
+                df, schema = self._with_bucket(df), self._bucketed(schema)
+                if files_per_bucket:
+                    df = df.repartition(
+                        self.n_buckets * files_per_bucket, "bucket"
+                    ).sortWithinPartitions("id")
+                writer = df.write.partitionBy("bucket")
+            else:
+                writer = df.write
+            writer.mode("overwrite").parquet(tmp)
+            written = _fingerprint(self.spark.read.schema(schema).parquet(tmp))
+            if written != expected:
+                raise RuntimeError(
+                    f"{table} rewrite verification failed: (rows, fingerprint) "
+                    f"{expected} -> {written}; table left untouched"
+                )
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        old = f"{path}.old-{uuid.uuid4().hex[:8]}"
+        if os.path.isdir(path):
+            os.rename(path, old)
+        os.rename(tmp, path)
+        shutil.rmtree(old, ignore_errors=True)
+        return expected[0]
 
     @staticmethod
     def _bucketed(schema):

@@ -5,10 +5,12 @@
 from __future__ import annotations
 
 import json
+import threading
 from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from eventsourcing_spark.maintenance import compact_events, forget, migrate_in_place
 from eventsourcing_spark.maintenance.migration import KIND_INVALIDATED
@@ -238,16 +240,15 @@ def test_vacuum_all_dropped_keeps_store_readable(spark, tmp_path):
     )
     # invalidate EVERY row by hand (simulates an aborted migration whose
     # new generation was already vacuumed): migration=1 on all rows
-    raw = store.events_raw().withColumn("migration", F.lit(1)).withColumn(
-        "bucket", F.pmod(F.col("aggregate_id_hash"), F.lit(store.n_buckets))
-    )
-    from eventsourcing_spark.maintenance.rewrite import overwrite_dir
-    overwrite_dir(raw, store._events_dir, partition_by=["bucket"])
+    with store._commit_lock():
+        store._rewrite_table(
+            "events", store.events_raw().withColumn("migration", F.lit(1))
+        )
 
     stats = vacuum_migrated(store)
     assert stats["rows_after"] == 0 and stats["rows_dropped"] == 1
     assert store.events_raw().count() == 0  # readable empty store
-    assert not glob.glob(str(tmp_path / "vz/events.vacuum-*"))  # no tmp leak
+    assert not glob.glob(str(tmp_path / "vz/events.*"))  # no tmp/old leak
     # still appendable after the wipe
     store.append(
         "acc-z2", "Account", [(KIND_CREATED, {"money": 2, "owner": "C"})],
@@ -381,3 +382,187 @@ def test_vacuum_drops_invalidated_generations(spark, tmp_path):
 
     # idempotent: second vacuum reclaims nothing
     assert vacuum_migrated(store)["rows_dropped"] == 0
+
+
+class _WriterInsideRewrite(threading.Thread):
+    """Runs ``write(store)`` on a thread started from inside a maintenance
+    operator: at its first parquet write under the events directory, i.e.
+    after the operator's frame has listed the table's files. The write
+    then gets up to 2 s to finish before the operator's write proceeds.
+    An unlocked rewrite lets the append land in the directory about to be
+    swapped out; under the commit lock the append waits for the swap, so
+    the outcome does not depend on timing."""
+
+    def __init__(self, monkeypatch, store, write):
+        super().__init__(daemon=True)
+        self.store, self.write = store, write
+        self.result, self.error = None, None
+        real = DataFrameWriter.parquet
+
+        def parquet(writer, path, *args, **kwargs):
+            if self.ident is None and path.startswith(store._events_dir):
+                self.start()
+                self.join(timeout=2.0)
+            return real(writer, path, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+    def run(self):
+        try:
+            self.result = self.write(self.store)
+        except Exception as e:  # noqa: BLE001 — asserted by the test
+            self.error = e
+
+    def outcome(self):
+        assert self.ident is not None, "the operator never wrote the table"
+        self.join(timeout=60)
+        assert not self.is_alive(), "append still blocked after the rewrite"
+        return self.result, self.error
+
+
+def _seed_account(store):
+    store.append(
+        "acc-m", "Account",
+        [(KIND_CREATED, {"money": 100, "owner": "Paulo Pereira"}),
+         (KIND_OWNER_UPDATED, {"owner": "Paulo Quintans"})],
+        expected_version=0, created_at=T0,
+    )
+
+
+_OPERATORS = {
+    "compact": compact_events,
+    "forget": lambda store: forget(
+        store, "acc-m", kinds=(KIND_OWNER_UPDATED,),
+        event_scrubber=lambda kind, body: {**body, "owner": ""},
+    ),
+    "migrate": lambda store: migrate_in_place(
+        store, revision=1, aggregate_kind="Account",
+        target_kinds=(KIND_CREATED,), handler=migration_handler, now=T1,
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_OPERATORS))
+def test_appends_during_rewrite_survive(spark, tmp_path, monkeypatch, op):
+    """Every append that returns while a maintenance operator rewrites the
+    events table is in the table afterwards (the reference's rewrites are
+    SQL transactions, store/postgresql/store.go:446-495)."""
+    store = EventStore(spark, str(tmp_path / op), n_buckets=4)
+    _seed_account(store)
+
+    def write(store):
+        return [
+            store.append(
+                f"fresh-{i}", "Wallet", [(KIND_DEPOSITED, {"money": i})],
+                expected_version=0, created_at=T1,
+            )[0]
+            for i in range(3)
+        ]
+
+    writer = _WriterInsideRewrite(monkeypatch, store, write)
+    _OPERATORS[op](store)
+    appended, error = writer.outcome()
+    assert error is None
+    ids = {r.id for r in store.events().collect()}
+    assert set(appended) <= ids, f"{len(set(appended) - ids)} appends lost"
+
+
+def test_migration_guard_rejects_concurrent_stale_append(
+    spark, tmp_path, monkeypatch
+):
+    """A writer that read the stream before the migration and appends at
+    the pre-migration ``expected_version`` while it runs collides with the
+    Invalidated guard (events_migration.go:96-110) instead of committing
+    an event the swap then drops."""
+    from eventsourcing_spark.store.event_store import ConcurrentModificationError
+
+    store = EventStore(spark, str(tmp_path / "guard"), n_buckets=4)
+    _seed_account(store)
+
+    writer = _WriterInsideRewrite(
+        monkeypatch, store,
+        lambda store: store.append(
+            "acc-m", "Account", [(KIND_DEPOSITED, {"money": 5})],
+            expected_version=2, created_at=T1,
+        ),
+    )
+    assert _OPERATORS["migrate"](store) == 1
+    _, error = writer.outcome()
+    assert isinstance(error, ConcurrentModificationError)
+    kinds = [
+        r.kind for r in store.events().filter(F.col("aggregate_id") == "acc-m")
+        .orderBy("aggregate_version").collect()
+    ]
+    assert kinds == [KIND_INVALIDATED, KIND_CREATED + "_V2", KIND_OWNER_UPDATED + "_V2"]
+
+
+def test_rewrite_verification_mismatch_leaves_table_untouched(
+    spark, tmp_path, monkeypatch
+):
+    """A rewrite whose read-back disagrees with its frame raises, removes
+    its temp directory, releases the lock and keeps the old table."""
+    import glob
+
+    from eventsourcing_spark.store import event_store
+
+    store = EventStore(spark, str(tmp_path / "vf"), n_buckets=4)
+    _seed_account(store)
+    before = sorted(tuple(r) for r in store.events().collect())
+    real = event_store._fingerprint
+    calls = []
+
+    def skewed(df):
+        calls.append(df)
+        n, fp = real(df)
+        return (n, fp + 1) if len(calls) == 2 else (n, fp)  # 2nd = read-back
+
+    monkeypatch.setattr(event_store, "_fingerprint", skewed)
+    with pytest.raises(RuntimeError, match="verification failed"):
+        _OPERATORS["forget"](store)
+    assert sorted(tuple(r) for r in store.events().collect()) == before
+    assert not glob.glob(str(tmp_path / "vf/events.*"))
+    assert not glob.glob(str(tmp_path / "vf/_commit.lock"))
+    with pytest.raises(RuntimeError, match="commit lock"):
+        store._rewrite_table("events", store.events_raw())
+
+
+def test_rewrite_stress_many_writers(spark, tmp_path):
+    """Six writer threads (more than this suite's cores) append fresh
+    streams with a shortened switch interval for as long as compaction
+    runs; every append that returned is in the table afterwards."""
+    import sys
+
+    store = EventStore(spark, str(tmp_path / "stress"), n_buckets=4)
+    _seed_account(store)
+    done = threading.Event()
+    appended, errors = [], []
+
+    def writer(w):
+        i = 0
+        while not done.is_set():
+            try:
+                appended.append(store.append(
+                    f"w{w}-{i}", "Wallet", [(KIND_DEPOSITED, {"money": i})],
+                    expected_version=0, created_at=T1,
+                )[0])
+            except Exception as e:  # noqa: BLE001 — asserted below
+                errors.append(e)
+                return
+            i += 1
+
+    threads = [threading.Thread(target=writer, args=(w,)) for w in range(6)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        compact_events(store)
+    finally:
+        done.set()
+        for t in threads:
+            t.join(timeout=60)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    ids = {r.id for r in store.events().collect()}
+    assert appended and set(appended) <= ids, f"{len(set(appended) - ids)} lost"
