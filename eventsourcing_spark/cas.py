@@ -1,13 +1,12 @@
 """Put-if-absent / compare-and-swap backend seam (VERDICT r9 #5).
 
-The two coordination protocols in this engine — the catch-up singleton
-lease (``projection/lease.py``, the reference's WaitForLock per
-dist/redlock/redlock.go:67-101) and the registry manifest log
-(``pipeline/registry_manifest.py``) — were built directly on POSIX
-``os.link`` / ``os.rename`` atomicity, with the object-store mapping
-("swap the primitive for a conditional PUT") living only in prose.
-This module makes that mapping a tested seam: both protocols now speak
-a small conditional-mutation interface, with
+The two coordination protocols in this engine speak this small
+conditional-mutation interface: the catch-up singleton lease
+(``projection/lease.py``, the reference's WaitForLock per
+dist/redlock/redlock.go:67-101) and the one commit log
+(``commit_log.py``), which the streaming-curation registries
+(``pipeline/registry_manifest.py``) and the event store (one log per
+table bucket) commit through. Implementations:
 
 * :class:`FileCasBackend` — the default, carrying the original POSIX
   protocol (hard-link create-if-absent; rename-to-tombstone-and-verify
@@ -41,7 +40,11 @@ Semantics (all operations atomic per key):
   matches (lease release AND stale-break: exactly one of N concurrent
   breakers armed with the same observed version can win, and none can
   ever remove a fresher value).
-* ``list_keys(prefix) -> [key]`` — manifest-log discovery.
+* ``list_keys(prefix) -> [key]`` — log discovery (checkpoints).
+
+Keys may contain ``/``: the file backend maps each segment to a
+directory, so one backend can root many logs (the event store's
+``events/<bucket>/…`` keys).
 """
 
 from __future__ import annotations
@@ -109,8 +112,9 @@ class FileCasBackend(CasBackend):
 
     # ---------------------------------------------------------- interface
     def put_if_absent(self, key: str, data: bytes) -> str | None:
-        os.makedirs(self.root, exist_ok=True)
-        tmp = self._path(f".tmp-{uuid.uuid4().hex}")
+        folder = os.path.dirname(self._path(key))
+        os.makedirs(folder, exist_ok=True)
+        tmp = os.path.join(folder, f".tmp-{uuid.uuid4().hex}")
         with open(tmp, "wb") as f:
             f.write(data)
             f.flush()
@@ -169,7 +173,7 @@ class FileCasBackend(CasBackend):
 
     def delete_if(self, key: str, expected: str) -> bool:
         path = self._path(key)
-        tomb = self._path(f".tomb-{uuid.uuid4().hex}")
+        tomb = os.path.join(os.path.dirname(path), f".tomb-{uuid.uuid4().hex}")
         try:
             os.rename(path, tomb)
         except FileNotFoundError:
@@ -189,13 +193,15 @@ class FileCasBackend(CasBackend):
         return True
 
     def list_keys(self, prefix: str = "") -> list[str]:
+        folder, _, start = prefix.rpartition("/")
         try:
-            names = os.listdir(self.root)
+            names = os.listdir(self._path(folder))
         except FileNotFoundError:
             return []
         return sorted(
-            n for n in names
-            if n.startswith(prefix) and not n.startswith((".tmp-", ".tomb-"))
+            f"{folder}/{n}" if folder else n
+            for n in names
+            if n.startswith(start) and not n.startswith((".tmp-", ".tomb-"))
         )
 
 

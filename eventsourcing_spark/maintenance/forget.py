@@ -4,8 +4,10 @@
 For a target ``(aggregate_id, kind)`` the reference decodes each body,
 runs a user scrubber, re-encodes, and UPDATEs the row — events and all
 the aggregate's snapshots — in one transaction. Here: one verified
-``EventStore._rewrite_table`` per table under the store's commit lock;
-the scrubber runs as an Arrow-batched pandas UDF on matching rows only,
+``EventStore._rewrite_table`` per table, of the aggregate's bucket only
+(every row of a stream lives in its bucket), each one remove+add commit
+on that bucket's log that keeps appends committed meanwhile. The
+scrubber runs as an Arrow-batched pandas UDF on matching rows only;
 everything else passes through untouched.
 """
 
@@ -49,20 +51,21 @@ def forget(
     test/pg/store_test.go:373-482)."""
     scrub = _scrub_udf(event_scrubber)
     match = (F.col("aggregate_id") == aggregate_id) & F.col("kind").isin(list(kinds))
-    with store._commit_lock():
-        ev = store.events_raw().withColumn(
-            "body", F.when(match, scrub("kind", "body")).otherwise(F.col("body"))
-        )
-        store._rewrite_table("events", ev)
+    bucket = [store._bucket(aggregate_id)]
+    pin = store._pin("events", bucket)
+    ev = store._scan("events", pin).withColumn(
+        "body", F.when(match, scrub("kind", "body")).otherwise(F.col("body"))
+    )
+    store._rewrite_table("events", ev, pin)
 
-        snaps = store.snapshots()
-        if snaps.limit(1).count():
-            snap_scrub = _scrub_udf(snapshot_scrubber or event_scrubber)
-            smatch = F.col("aggregate_id") == aggregate_id
-            out = snaps.withColumn(
-                "body",
-                F.when(smatch, snap_scrub("aggregate_kind", "body")).otherwise(
-                    F.col("body")
-                ),
-            )
-            store._rewrite_table("snapshots", out)
+    pin = store._pin("snapshots", bucket)
+    if any(h.files for h in pin.values()):
+        snap_scrub = _scrub_udf(snapshot_scrubber or event_scrubber)
+        smatch = F.col("aggregate_id") == aggregate_id
+        out = store._scan("snapshots", pin).withColumn(
+            "body",
+            F.when(smatch, snap_scrub("aggregate_kind", "body")).otherwise(
+                F.col("body")
+            ),
+        )
+        store._rewrite_table("snapshots", out, pin)

@@ -15,11 +15,22 @@ is literally UDTF-shaped — one stream in, N events out
 grouped-map: shuffle once on aggregate_id, transform every stream in
 parallel, no driver involvement.
 
-The whole pass runs under the store's commit lock and writes through
-``EventStore._rewrite_table`` (verified temp-directory swap): a writer
-that read the stream before the migration waits for the swap, then
-collides with the guard's version — the reference's transaction
-semantics (events_migration.go:96-110).
+The pass reads the bucket heads once and writes through
+``EventStore._rewrite_table``: a verified staged write, then one
+remove+add commit per bucket log, in bucket order. This differs from
+the reference, which migrates in one SQL transaction
+(events_migration.go:96-110): here each bucket commits on its own.
+Every stream lives in one bucket, so each stream still migrates
+atomically, and first committer wins per stream:
+
+* a writer that read the stream before the migration and appends after
+  its bucket committed collides with the Invalidated guard's version;
+* an append committed to a migrating stream after the heads were read
+  makes that bucket's commit raise ``ConcurrentModificationError``,
+  after the buckets before it have committed. Re-running with the same
+  revision migrates the rest: candidates are re-selected from the
+  active generation, as the reference's loop re-selects streams still
+  at ``migration = 0`` with a target kind (events_migration.go:69-87).
 
 Golden acceptance: test/pg/store_test.go:484-633 — a 4-event stream
 becomes 9 rows (v1-4 migration=rev, v5 Invalidated, v6-9 migrated
@@ -56,20 +67,13 @@ def migrate_in_place(
     """Copy-replace migrate every stream of ``aggregate_kind`` whose
     history contains any of ``target_kinds``. Returns #streams migrated.
     """
-    with store._commit_lock():
-        return _migrate_locked(
-            store, revision, aggregate_kind, target_kinds, handler,
-            new_aggregate_kind or aggregate_kind,
-            now or datetime.now(timezone.utc),
-        )
-
-
-def _migrate_locked(
-    store, revision, aggregate_kind, target_kinds, handler, new_kind, now
-) -> int:
+    new_kind = new_aggregate_kind or aggregate_kind
+    now = now or datetime.now(timezone.utc)
     created_naive = now.replace(tzinfo=None)
 
-    events = store.events()
+    pin = store._pin("events")
+    raw = store._scan("events", pin)
+    events = raw.filter(F.col("migration") == 0)
     # candidate streams: history contains a target kind (J3 semi-join)
     candidates = (
         events.filter(
@@ -169,26 +173,27 @@ def _migrate_locked(
         return pd.DataFrame(rows, columns=out_columns)
 
     new_gen = streams.groupBy("aggregate_id").applyInPandas(transform, EVENT_SCHEMA)
-    # cut lineage: everything below must NOT recompute from the events dir
-    # once it is swapped (localCheckpoint → reliable checkpoint on a cluster)
+    # cut lineage: the rewrite below must not recompute from files that
+    # the snapshot and bucket commits delete
     new_gen = new_gen.transform(materialize)
     candidates = candidates.transform(materialize)
     n_streams = new_gen.filter(F.col("kind") == KIND_INVALIDATED).count()
     if n_streams == 0:
         return 0
 
-    # delete the streams' snapshots BEFORE the events swap (the source
-    # predicate reads the old events dir; events_migration.go:129-134)
-    snaps = store.snapshots()
-    if snaps.limit(1).count():
-        remaining = snaps.join(candidates, "aggregate_id", "left_anti")
-        store._rewrite_table("snapshots", remaining)
+    # delete the streams' snapshots before the events commit
+    # (events_migration.go:129-134)
+    snap_pin = store._pin("snapshots")
+    if any(h.files for h in snap_pin.values()):
+        remaining = store._scan("snapshots", snap_pin).join(
+            candidates, "aggregate_id", "left_anti"
+        )
+        store._rewrite_table("snapshots", remaining, snap_pin, candidates)
 
     # 1) UPDATE old generation: migration = rev WHERE migration = 0
     #    (events_migration.go:123-127) — left-semi against candidates
     marked = (
-        store.events_raw()
-        .join(
+        raw.join(
             candidates.withColumnRenamed("aggregate_id", "_mig_id"),
             F.col("aggregate_id") == F.col("_mig_id"),
             "left",
@@ -202,5 +207,5 @@ def _migrate_locked(
         )
         .drop("_mig_id")
     )
-    store._rewrite_table("events", marked.unionByName(new_gen))
+    store._rewrite_table("events", marked.unionByName(new_gen), pin, candidates)
     return n_streams

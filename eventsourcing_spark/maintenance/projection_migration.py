@@ -11,9 +11,12 @@ Spark-first, the per-aggregate loop becomes three set-oriented steps:
 one fold job for ALL states, one parquet write, one batch NoOp append
 generated as a DataFrame (ULIDs minted by the JVM-side ``ulid_random``
 expression — no driver loop, no Python in the hot path) through the
-store's ``_append_rows_df``. The pass holds the store's commit lock, so
-a writer that read a stream before the flush waits, then collides with
-the NoOp's version.
+store's ``_append_rows_df``, committed bucket by bucket over the heads
+the fold read. A stream appended to after that read makes its bucket's
+guard commit raise ``ConcurrentModificationError`` (first committer
+wins, as the reference's unique index decides); a writer that read a
+stream before the flush and appends after the guard collides with the
+NoOp's version.
 """
 
 from __future__ import annotations
@@ -48,45 +51,49 @@ def migrate_consistent_projection(
     ledger_path = os.path.join(store.base_dir, "projection_migration")
     done_file = os.path.join(ledger_path, f"{name}.json")
     now = now or datetime.now(timezone.utc)
-    with store._commit_lock():
-        if os.path.exists(done_file):
-            return 0
-        events = store.events().filter(F.col("aggregate_kind") == aggregate_kind)
-        events = events.transform(materialize)  # consistent basis for both steps
+    if os.path.exists(done_file):
+        return 0
+    pin = store._pin("events")
+    events = store._scan("events", pin).filter(
+        (F.col("migration") == 0) & (F.col("aggregate_kind") == aggregate_kind)
+    )
+    events = events.transform(materialize)  # consistent basis for both steps
 
-        # 1) one fold job for all states → the new read-model table
-        states = fold(events)
-        states.write.mode("overwrite").parquet(out_dir)
+    # 1) one fold job for all states → the new read-model table
+    states = fold(events)
+    states.write.mode("overwrite").parquet(out_dir)
 
-        # 2) batch NoOp guard: version = max+1 per stream, ids minted JVM-side
-        guards = (
-            events.groupBy("aggregate_id")
-            .agg(
-                F.max("aggregate_version").alias("v"),
-                F.first("aggregate_id_hash").alias("aggregate_id_hash"),
-                F.first("discriminator").alias("discriminator"),
-            )
-            .select(
-                ulid_random(F.lit(now)).alias("id"),
-                "aggregate_id",
-                "aggregate_id_hash",
-                (F.col("v") + 1).cast("int").alias("aggregate_version"),
-                F.lit(aggregate_kind).alias("aggregate_kind"),
-                F.lit(KIND_NOOP).alias("kind"),
-                F.lit(b"{}").alias("body"),
-                F.lit(now.replace(tzinfo=None)).cast("timestamp").alias("created_at"),
-                F.lit(0).alias("migration"),
-                F.lit(False).alias("migrated"),
-                "discriminator",
-            )
+    # 2) batch NoOp guard: version = max+1 per stream, ids minted JVM-side
+    guards = (
+        events.groupBy("aggregate_id")
+        .agg(
+            F.max("aggregate_version").alias("v"),
+            F.first("aggregate_id_hash").alias("aggregate_id_hash"),
+            F.first("discriminator").alias("discriminator"),
         )
-        guards = guards.select(*[f.name for f in EVENT_SCHEMA.fields])
-        n = guards.count()
-        if n:
-            store._append_rows_df(guards)
+        .select(
+            ulid_random(F.lit(now)).alias("id"),
+            "aggregate_id",
+            "aggregate_id_hash",
+            (F.col("v") + 1).cast("int").alias("aggregate_version"),
+            F.lit(aggregate_kind).alias("aggregate_kind"),
+            F.lit(KIND_NOOP).alias("kind"),
+            F.lit(b"{}").alias("body"),
+            F.lit(now.replace(tzinfo=None)).cast("timestamp").alias("created_at"),
+            F.lit(0).alias("migration"),
+            F.lit(False).alias("migrated"),
+            "discriminator",
+        )
+    )
+    guards = guards.select(*[f.name for f in EVENT_SCHEMA.fields])
+    n_streams = guards.count()
+    if n_streams:
+        store._append_rows_df(guards, pin, guards.select("aggregate_id"))
 
-        # 3) ledger entry (projection_migration table analog)
-        os.makedirs(ledger_path, exist_ok=True)
-        with open(done_file, "w") as fh:
-            json.dump({"name": name, "aggregates": n, "at": now.isoformat()}, fh)
-    return n
+    # 3) ledger entry (projection_migration table analog)
+    os.makedirs(ledger_path, exist_ok=True)
+    with open(done_file, "w") as fh:
+        json.dump(
+            {"name": name, "aggregates": n_streams, "at": now.isoformat()}, fh
+        )
+    return n_streams

@@ -8,22 +8,19 @@ eventually reclaim: ``vacuum_migrated`` rewrites the events table
 keeping only ``migration = 0`` rows plus the last ``keep_revisions``
 invalidated generations (0 = drop all superseded rows).
 
-The rewrite is ``EventStore._rewrite_table`` under the store's commit
-lock, like every maintenance rewrite: the retained frame is verified
-(row count + order-free id fingerprint) against what was written before
-the directory swap — a mismatch aborts with the store untouched — and
-appends made meanwhile wait for the swap. On Delta/Iceberg this is
-VACUUM after a rewrite; the operator only builds DataFrames, so it
-ports unchanged.
+The rewrite is ``EventStore._rewrite_table``, like every maintenance
+rewrite: the retained frame is verified (row count + order-free id
+fingerprint) against what was staged before any bucket commits — a
+mismatch aborts with the store untouched — and each bucket then commits
+remove+add, keeping appends committed meanwhile (they are all
+``migration = 0``). On Delta/Iceberg this is VACUUM after a rewrite;
+the operator only builds DataFrames, so it ports unchanged.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
-from eventsourcing_spark.maintenance.compaction import _dir_stats
 from eventsourcing_spark.store.event_store import EventStore
 
 
@@ -31,35 +28,33 @@ def vacuum_migrated(store: EventStore, keep_revisions: int = 0) -> dict:
     """Drop invalidated generations older than the last
     ``keep_revisions`` migration revisions. Returns ``{rows_before,
     rows_after, rows_dropped, files_before, files_after}``."""
-    events_dir = store._events_dir
-    if not os.path.isdir(events_dir):
+    pin = store._pin("events")
+    files_before = sum(len(h.files) for h in pin.values())
+    if files_before == 0:
         return {
             "rows_before": 0, "rows_after": 0, "rows_dropped": 0,
             "files_before": 0, "files_after": 0,
         }
-    with store._commit_lock():
-        files_before, _ = _dir_stats(events_dir)
-        ev = store.events_raw()
-        n_before, max_rev = ev.agg(F.count("*"), F.max("migration")).first()
+    ev = store._scan("events", pin)
+    n_before, max_rev = ev.agg(F.count("*"), F.max("migration")).first()
 
-        keep_pred = F.col("migration") == 0
-        if keep_revisions > 0:
-            cutoff = max(0, (max_rev or 0) - keep_revisions)
-            keep_pred = keep_pred | (F.col("migration") > cutoff)
-        kept = ev.filter(keep_pred)
-        n_keep = kept.count()
-        if n_keep == n_before:  # nothing to reclaim — skip the rewrite
-            return {
-                "rows_before": n_before, "rows_after": n_before,
-                "rows_dropped": 0,
-                "files_before": files_before, "files_after": files_before,
-            }
-        store._rewrite_table("events", kept)
-        files_after, _ = _dir_stats(events_dir)
+    keep_pred = F.col("migration") == 0
+    if keep_revisions > 0:
+        cutoff = max(0, (max_rev or 0) - keep_revisions)
+        keep_pred = keep_pred | (F.col("migration") > cutoff)
+    kept = ev.filter(keep_pred)
+    n_keep = kept.count()
+    if n_keep == n_before:  # nothing to reclaim — skip the rewrite
+        return {
+            "rows_before": n_before, "rows_after": n_before,
+            "rows_dropped": 0,
+            "files_before": files_before, "files_after": files_before,
+        }
+    store._rewrite_table("events", kept, pin)
     return {
         "rows_before": n_before,
         "rows_after": n_keep,
         "rows_dropped": n_before - n_keep,
         "files_before": files_before,
-        "files_after": files_after,
+        "files_after": sum(len(h.files) for h in store._pin("events").values()),
     }

@@ -5,71 +5,53 @@ md5 set, streaming_neardup's band set, streaming_incremental's pair of
 sets, streaming_nb's additive counts) were bare parquet directories —
 writers appended files, readers listed the directory, and compaction
 swapped the whole directory under a quiescence contract enforced only
-by a loud abort. Two structural problems at scale:
+by a loud abort. A reader listing a directory mid-swap saw a missing
+path, and a file appended between a compaction's scan and its swap was
+deleted silently.
 
-* a reader listing a directory mid-swap sees a missing path for a
-  moment and would treat the registry as empty for that batch;
-* compaction can never run while ingest is live, because a file
-  appended between its scan and its swap would be deleted silently.
-
-The manifest protocol removes both. A registry directory holds
-immutable DATA UNITS (each one parquet directory written exactly once)
-plus a ``_manifests/`` log of versioned JSON manifests:
+A registry directory now holds immutable DATA UNITS (each one parquet
+directory written exactly once) plus a ``_manifests/`` commit log:
 
     reg/
-      _manifests/v000000000001.json   {"version":1,"files":[...],
-                                       "epochs":{...}}
-      _manifests/v000000000002.json
+      _manifests/v000000000001.json   {"version":1,"add":[...],"remove":[...]}
+      _manifests/c000000000032.json   checkpoint: every live unit at v32
       data-4f2a.../part-*.parquet     (one dir per committed append)
       compact-9c1b.../part-*.parquet  (compaction rewrites)
 
-* Writers append a new data unit, then COMMIT: atomically create
-  manifest version N+1 whose file list is (latest manifest's files +
-  the new unit). The create is ``os.link`` of a fully-written temp
-  file onto the versioned name — atomic on POSIX, and it FAILS if the
-  version already exists, which is the optimistic-concurrency
-  primitive: on conflict the committer re-reads the latest manifest
-  and retries, so concurrent appends serialize without locks. (On an
-  object store, swap this primitive for a conditional PUT /
-  put-if-absent; the protocol is otherwise unchanged.)
-* Readers read the NEWEST manifest and scan exactly the units it
-  lists — never a raw directory listing, so a reader can never see a
-  half-committed append or a mid-compaction hole.
-* Compaction rewrites the units of manifest version N into one compact
-  unit, then commits with the same retry loop: if appends landed while
-  it rewrote (latest is now M > N), the new manifest carries the
-  compact unit PLUS every unit committed after N — nothing is lost, no
-  abort, no quiescence contract. Superseded units stay on disk until
-  ``vacuum_registry`` removes unreferenced units older than a grace
-  period (protecting readers that pinned an older manifest).
+The log is the engine's one commit protocol (``commit_log.py``, which
+the event store's per-bucket logs use too): writers append a unit, then
+``put_if_absent`` version N+1 carrying ``add``/``remove`` entries,
+re-deriving the entry from the new head whenever a concurrent committer
+wins the version. Readers resolve the newest head (checkpoint plus
+entries) and scan exactly its units — never a raw directory listing.
+Compaction rewrites the units of head N into one compact unit and
+commits ``remove`` of those units plus ``add`` of the compact one; units
+appended after N stay live — nothing is lost, no abort, no quiescence
+contract. Superseded units stay on disk until ``vacuum_registry``
+removes unreferenced units older than a grace period (protecting
+readers that pinned an older head).
+
+``latest_manifest`` presents a head in the manifest shape the registry
+code reads: ``{"version", "files", "epochs"}``.
 
 Exactly-once for ADDITIVE registries (streaming_nb counts): an append
-may carry an ``epoch_key``; the manifest's ``epochs`` map records which
-units each epoch owns, and committing the same epoch again REPLACES
-that epoch's units (foreachBatch replays a failed batch under the same
-epoch id, so the retry overwrites its own partial output instead of
-double-counting). Counts compaction folds every epoch EXCEPT the
-newest — the only one Structured Streaming can still replay — and
-retains folded epoch keys with an empty unit list as tombstones.
+may carry an ``epoch_key``, recorded on its unit; committing the same
+epoch again REPLACES that epoch's units (foreachBatch replays a failed
+batch under the same epoch id, so the retry overwrites its own partial
+output instead of double-counting). Counts compaction folds every epoch
+EXCEPT the newest — the only one Structured Streaming can still replay.
 
 Legacy layout: a registry written before this protocol (or by tests
 that hand-place parquet files) has data at the top level and no
 ``_manifests/``. ``read_registry`` falls back to the raw-directory
-read for those, and the first manifest commit on such a directory
-adopts the existing top-level parquet files as unit zero, so old
-registries upgrade in place on their next append or compaction.
-
-Scale shape: the manifest is a single small JSON (thousands of unit
-names at most between compactions); reading it is one driver-side
-stat+read, far cheaper than the per-file listing a raw directory scan
-pays. Data units are immutable, so the parquet footprint works on any
-Hadoop-compatible filesystem; only the commit primitive is
-POSIX-specific here.
+read for those, and the first commit on such a directory adopts the
+existing top-level parquet files as units, so old registries upgrade
+in place on their next append or compaction.
 """
 
 from __future__ import annotations
 
-import json
+import functools
 import os
 import shutil
 import time
@@ -79,54 +61,49 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from eventsourcing_spark.cas import CasBackend, FileCasBackend
+from eventsourcing_spark.commit_log import CommitLog, Head
 
 _MANIFESTS = "_manifests"
-_COMMIT_RETRIES = 64
 
 
 def _manifest_dir(reg_dir: str) -> str:
     return os.path.join(reg_dir, _MANIFESTS)
 
 
-def _manifest_backend(
-    reg_dir: str, backend: CasBackend | None
-) -> CasBackend:
-    """The conditional-PUT seam for the manifest LOG (VERDICT r9 #5):
-    default is the POSIX file backend rooted at ``_manifests/`` (the
-    original os.link protocol); an object-store/CAS backend slots in
-    via the ``backend`` argument on every public function. Data units
-    stay plain parquet either way — only the commit log needs the
-    conditional primitive."""
-    return backend if backend is not None else FileCasBackend(
-        _manifest_dir(reg_dir)
+def _log(reg_dir: str, backend: CasBackend | None) -> CommitLog:
+    """The registry's commit log: ``backend`` when given (an object-store
+    or memory CAS), else the POSIX file backend under ``_manifests/``.
+    Data units stay plain parquet either way."""
+    return _cached_log(os.path.abspath(reg_dir), backend)
+
+
+@functools.lru_cache(maxsize=256)
+def _cached_log(reg_dir: str, backend: CasBackend | None) -> CommitLog:
+    """One ``CommitLog`` per (registry, backend) for the process, so every
+    read after the first probes only the next version's key (two gets)
+    instead of loading the newest checkpoint and its entries again. A
+    registry's log is never deleted while the process runs."""
+    return CommitLog(
+        backend if backend is not None else FileCasBackend(_manifest_dir(reg_dir))
     )
 
 
-def _manifest_key(version: int) -> str:
-    return f"v{version:012d}.json"
+def _manifest(head: Head) -> dict:
+    epochs: dict[str, list[str]] = {}
+    for f in head.files.values():
+        if "epoch" in f:
+            epochs.setdefault(f["epoch"], []).append(f["path"])
+    return {"version": head.version, "files": list(head.files), "epochs": epochs}
 
 
 def latest_manifest(
     reg_dir: str, backend: CasBackend | None = None
 ) -> dict:
-    """The newest committed manifest, or the empty v0 when none exists.
-
-    Shape: {"version": int, "files": [unit, ...], "epochs": {key: [unit,
-    ...]}} — ``files`` is the complete live unit list (epoch-owned units
-    included); ``epochs`` only adds ownership for replace-on-retry."""
-    be = _manifest_backend(reg_dir, backend)
-    for _ in range(8):  # a superseded name can be vacuumed between
-        names = [  # list and read; the newest itself never is
-            n for n in be.list_keys("v") if n.endswith(".json")
-        ]
-        if not names:
-            return {"version": 0, "files": [], "epochs": {}}
-        entry = be.get(max(names))
-        if entry is not None:
-            m = json.loads(entry.data.decode("utf-8"))
-            m.setdefault("epochs", {})
-            return m
-    raise RuntimeError(f"manifest log unreadable under churn: {reg_dir}")
+    """The newest committed head as ``{"version": int, "files": [unit,
+    ...], "epochs": {key: [unit, ...]}}`` (the empty v0 when nothing is
+    committed): ``files`` is the complete live unit list, ``epochs`` the
+    live units of each epoch key."""
+    return _manifest(_log(reg_dir, backend).head())
 
 
 def _adopt_legacy_units(reg_dir: str) -> list[str]:
@@ -149,49 +126,31 @@ def commit(
     expect_version: int | None = None,
     backend: CasBackend | None = None,
 ) -> dict:
-    """Atomically publish a new manifest; returns it.
+    """Commit ``add_units`` / ``remove_units`` as the next version; returns
+    the new manifest. The entry is re-derived from the head after every
+    lost race, so no concurrently committed unit is dropped; the very
+    first commit also adopts legacy top-level files. With ``epoch_key``,
+    units previously committed under that epoch are replaced (idempotent
+    foreachBatch retry). ``expect_version`` (compaction) names the head
+    ``remove_units`` came from; newer units are merged in, never
+    aborted on."""
+    gone = set(remove_units)
 
-    Optimistic-concurrency loop: build the next manifest from the
-    CURRENT latest (adopting legacy top-level files on the very first
-    commit) and ``put_if_absent`` it onto the next version number (the
-    file backend's os.link of a fully-written temp file; an object
-    store's conditional PUT). A concurrent committer winning the create
-    makes this one re-read and retry — every retry re-derives the file
-    list, so no committed unit is ever dropped. With ``epoch_key``,
-    units previously owned by that epoch are replaced (idempotent
-    foreachBatch retry). ``expect_version`` (compaction) bounds which
-    units ``remove_units`` may target; it does NOT abort on newer
-    versions — later appends are merged in, which is the whole point."""
-    be = _manifest_backend(reg_dir, backend)
-    for _ in range(_COMMIT_RETRIES):
-        cur = latest_manifest(reg_dir, backend)
-        if cur["version"] == 0:
-            cur["files"] = _adopt_legacy_units(reg_dir)
-        files = [u for u in cur["files"] if u not in set(remove_units)]
-        epochs = {
-            k: [u for u in v if u not in set(remove_units)]
-            for k, v in cur["epochs"].items()
+    def derive(head: Head) -> dict:
+        legacy = _adopt_legacy_units(reg_dir) if head.version == 0 else []
+        stale = gone | {
+            p for p, f in head.files.items()
+            if epoch_key is not None and f.get("epoch") == epoch_key
         }
-        if epoch_key is not None:
-            stale = set(epochs.get(epoch_key, []))
-            files = [u for u in files if u not in stale]
-            epochs[epoch_key] = list(add_units)
-        files = files + [u for u in add_units if u not in files]
-        nxt = {
-            "version": cur["version"] + 1,
-            "files": files,
-            "epochs": epochs,
+        kept = {p for p in [*head.files, *legacy] if p not in stale}
+        tag = {} if epoch_key is None else {"epoch": epoch_key}
+        return {
+            "remove": [p for p in head.files if p in stale],
+            "add": [{"path": u} for u in legacy if u in kept]
+            + [{"path": u, **tag} for u in add_units if u not in kept],
         }
-        if be.put_if_absent(
-            _manifest_key(nxt["version"]),
-            json.dumps(nxt).encode("utf-8"),
-        ) is not None:
-            return nxt
-        # lost the race — merge and retry from the new latest
-    raise RuntimeError(
-        f"manifest commit lost {_COMMIT_RETRIES} consecutive races on "
-        f"{reg_dir}"
-    )
+
+    return _manifest(_log(reg_dir, backend).commit(derive))
 
 
 def read_registry(
@@ -324,8 +283,8 @@ def compact_counts_registry(
     groupBy-sum unit. The newest epoch's units are left unfolded — it is
     the only epoch Structured Streaming can still replay, and a replay
     must find its own units to replace, not a fold that already absorbed
-    them (folding it would double-count on retry). Folded epochs stay in
-    the manifest as empty tombstones so the keys remain known. Totals
+    them (folding it would double-count on retry). The compact unit
+    carries no epoch, so folded epochs drop out of ``epochs``. Totals
     are verified: sum of every ``sum_col`` unchanged through the fold."""
     m = latest_manifest(reg_dir, backend)
     if not m["files"]:
@@ -383,7 +342,8 @@ def vacuum_registry(
     """Delete data units no manifest-live reader can need: units NOT in
     the newest manifest whose mtime is older than ``grace_seconds`` (the
     window protects readers that pinned an older manifest mid-scan), and
-    superseded manifest files older than the same grace. Returns
+    log entries and checkpoints below a fresh checkpoint of the head,
+    older than the same grace (``CommitLog.vacuum``). Returns
     {units_removed, manifests_removed}."""
     m = latest_manifest(reg_dir, backend)
     if m["version"] == 0:
@@ -402,18 +362,7 @@ def vacuum_registry(
             else:
                 os.unlink(full)
             units_removed += 1
-    manifests_removed = 0
-    be = _manifest_backend(reg_dir, backend)
-    latest_name = _manifest_key(m["version"])
-    for name in be.list_keys("v"):
-        if name == latest_name or not name.endswith(".json"):
-            continue
-        entry = be.get(name)
-        # version-checked delete: a name re-read or re-aged between the
-        # list and the delete simply survives until the next vacuum
-        if entry is not None and entry.age > grace_seconds:
-            if be.delete_if(name, entry.version):
-                manifests_removed += 1
+    manifests_removed = _log(reg_dir, backend).vacuum(grace_seconds)
     return {
         "units_removed": units_removed,
         "manifests_removed": manifests_removed,

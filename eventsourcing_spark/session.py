@@ -68,6 +68,10 @@ def get_spark(
         # Parquet scan batching.
         .config("spark.sql.parquet.enableVectorizedReader", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # The event store's views name their committed files one by one
+        # (from the bucket logs); past 32 paths Spark would otherwise run
+        # a listing job for every view it builds.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000")
         .config("spark.sql.session.timeZone", "UTC")
         # The driver's events.parquet carries TIMESTAMP(NANOS) which the
         # vectorized reader rejects; read as long nanos and normalize in

@@ -22,32 +22,39 @@ DataFrame views and conflict-checked parquet appends:
                          (store/postgresql/store.go:425)
 * M4 ``save_snapshot`` + threshold bookkeeping (eventstore.go:381-400)
 
-Storage is a directory of parquet appends. On a production cluster the
-same protocol runs over Delta/Iceberg where the conflict check and the
-append commit atomically; the class isolates that seam in
-``_read_stream`` + ``_append_rows`` + ``_rewrite_table`` so only those
-methods change. ``_read_stream`` serves both the conflict check and the
-single-key point reads (``read_aggregate_events``, ``read_snapshot``),
-so on a lakehouse those reads must see the same table version as the
-conflict check. ``_rewrite_table`` is the one table-rewrite path of the
-maintenance operators (forget, migrations, compaction, vacuum): a
-verified temp-directory swap made under the commit lock, so an append
-either lands before the rewrite's scan or waits for the swap and is
-conflict-checked against the rewritten table (the reference runs these
-operators as SQL transactions, store/postgresql/store.go:446-495).
-Partition layout: events are written with a ``bucket`` column =
-``pmod(aggregate_id_hash, n_buckets)`` and partitioned by it on disk,
-mirroring the reference's split predicate (F3) so split-filtered scans
-prune entire directories. Only this class knows that layout.
+Storage: each table (``events``, ``snapshots``) is bucketed by
+``pmod(aggregate_id_hash, n_buckets)`` into ``<table>/bucket=N/*.parquet``,
+mirroring the reference's split predicate (F3), and every bucket has its
+own commit log (``commit_log.CommitLog`` over the store's ``CasBackend``,
+keys ``<table>/<N>/…``; by default files under ``_log/``). The per-bucket
+log is the seam: a file is part of the table once, and only while, a log
+entry adds it, and every read — the Spark views and the driver-side
+``_read_stream`` alike — resolves its files from the bucket heads and
+never lists a directory. ``append`` / ``save_snapshot`` write one file
+under ``<table>/_pending/`` and ``put_if_absent`` the next version of the
+stream's bucket log; losing that race re-runs the conflict check against
+the new head (a version clash still raises
+``ConcurrentModificationError``, the reference's unique index,
+store/postgresql/store.go:258-264). Only a published commit moves its
+files into ``bucket=N/``, so a directory reader (the file-source stream
+of ``projection.events_file_stream``) never sees a rejected write. Writers on
+different buckets never wait for each other. Each driver-side entry
+records its one ``aggregate_id``, so a point read opens only the files
+that can hold its stream; Spark-written files (``bulk_import``, the
+maintenance rewrites) carry no id and are always read. ``_rewrite_table``
+is the one rewrite path of the maintenance operators (forget,
+migrations, compaction, vacuum): a verified staged write, then one
+remove+add commit per bucket that merges appends committed meanwhile, or
+raises ``ConcurrentModificationError`` when a newer entry may hold a
+stream a migration rewrote. On a lakehouse the per-bucket log is a
+Delta/Iceberg table's own log. Only this class knows the layout.
 """
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 import shutil
-import time
 import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
@@ -57,7 +64,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from eventsourcing_spark.functions.hashing import fnv1a_32_py, split_predicate
+from eventsourcing_spark.cas import CasBackend, FileCasBackend
+from eventsourcing_spark.commit_log import CommitLog, Head
+from eventsourcing_spark.functions.hashing import (
+    fnv1a_32,
+    fnv1a_32_py,
+    split_predicate,
+)
 from eventsourcing_spark.functions.ulid import UlidGenerator
 from eventsourcing_spark.schema import EVENT_SCHEMA, SNAPSHOT_SCHEMA
 
@@ -68,8 +81,23 @@ def _arrow_schema(schema) -> pa.Schema:
     return pa.schema([f.with_nullable(True) for f in to_arrow_schema(schema)])
 
 
-_ARROW_EVENT_SCHEMA = _arrow_schema(EVENT_SCHEMA)
-_ARROW_SNAPSHOT_SCHEMA = _arrow_schema(SNAPSHOT_SCHEMA)
+_SCHEMAS = {"events": EVENT_SCHEMA, "snapshots": SNAPSHOT_SCHEMA}
+_ARROW_SCHEMAS = {t: _arrow_schema(s) for t, s in _SCHEMAS.items()}
+
+
+_PENDING = "_pending"  # uncommitted files, hidden from directory readers
+
+
+def _may_hold(files: list[dict], streams: DataFrame) -> bool:
+    """Whether any of ``files`` may hold a stream of ``streams``: a file
+    whose entry records no ``aggregate_id`` may hold any, and the ids the
+    entries record are looked up in ``streams`` by a Spark job."""
+    if any("aggregate_id" not in f for f in files):
+        return True
+    ids = sorted({f["aggregate_id"] for f in files})
+    return bool(ids) and bool(
+        streams.filter(F.col("aggregate_id").isin(ids)).limit(1).count()
+    )
 
 
 def _fingerprint(df: DataFrame) -> tuple[int, int]:
@@ -139,6 +167,7 @@ class EventStore:
         snapshot_threshold: int = 100,
         allowed_discriminator_keys: tuple[str, ...] | None = None,
         n_buckets: int = 32,
+        backend: CasBackend | None = None,
     ):
         self.spark = spark
         self.base_dir = base_dir
@@ -147,48 +176,58 @@ class EventStore:
         self.n_buckets = n_buckets
         self._events_dir = os.path.join(base_dir, "events")
         self._snapshots_dir = os.path.join(base_dir, "snapshots")
-        self._lock_dir = os.path.join(base_dir, "_commit.lock")
+        self.backend = (
+            backend if backend is not None
+            else FileCasBackend(os.path.join(base_dir, "_log"))
+        )
+        self._logs = {
+            (t, b): CommitLog(self.backend, f"{t}/{b}/")
+            for t in _SCHEMAS
+            for b in range(n_buckets)
+        }
+        self._open_log()
+
+    def _open_log(self) -> None:
+        """Record the layout as the first entry of the ``layout/`` log;
+        refuse a directory whose data no log describes, or a log written
+        with another bucket count."""
+        layout = {"path": "layout", "n_buckets": self.n_buckets}
+        log = CommitLog(self.backend, "layout/")
+        if log.head().version == 0 and any(
+            n.endswith(".parquet")
+            for t in _SCHEMAS
+            for _root, _dirs, names in os.walk(self._dir(t))
+            for n in names
+        ):
+            raise ValueError(f"{self.base_dir} holds table data but no commit log")
+        head = log.commit(lambda h: None if h.version else {"add": [layout]})
+        if head.files["layout"] != layout:
+            raise ValueError(
+                f"{self.base_dir} was created with {head.files['layout']}"
+            )
 
     # ------------------------------------------------------------------ views
     def events_raw(self) -> DataFrame:
         """All generations, including migration-invalidated rows."""
-        if not self._exists(self._events_dir):
-            return self.spark.createDataFrame([], EVENT_SCHEMA)
-        df = self.spark.read.schema(self._bucketed(EVENT_SCHEMA)).parquet(
-            self._events_dir
-        )
-        return df.drop("bucket")
+        return self._view("events")
 
     def events(self) -> DataFrame:
         """Active events — the standing F8 ``migration = 0`` view."""
         return self.events_raw().filter(F.col("migration") == 0)
 
     def _events_pruned(self, buckets: list[int]) -> DataFrame:
-        """Active-events view restricted to specific bucket directories.
+        """Active-events view over the files of ``buckets`` only.
 
-        The filter lands on the ``bucket`` partition column, so Spark
-        prunes whole directories at planning time — a single-stream read
-        (S2) touches 1/n_buckets of the table, and a split-filtered scan
-        (F3) reads only its splits' directories. This is the access-path
-        role of the reference's ``(aggregate_id, migration)`` index
-        (store/postgresql/store.go:699-701), recreated as physical
-        layout instead of a btree.
+        A single-stream read (S2) touches 1/n_buckets of the table, and a
+        split-filtered scan (F3) reads only its splits' buckets. This is
+        the access-path role of the reference's ``(aggregate_id,
+        migration)`` index (store/postgresql/store.go:699-701), recreated
+        as physical layout instead of a btree.
         """
-        if not self._exists(self._events_dir):
-            return self.spark.createDataFrame([], EVENT_SCHEMA)
-        df = self.spark.read.schema(self._bucketed(EVENT_SCHEMA)).parquet(
-            self._events_dir
-        )
-        return (
-            df.filter(F.col("bucket").isin(buckets))
-            .drop("bucket")
-            .filter(F.col("migration") == 0)
-        )
+        return self._view("events", buckets).filter(F.col("migration") == 0)
 
     def snapshots(self) -> DataFrame:
-        if not self._exists(self._snapshots_dir):
-            return self.spark.createDataFrame([], SNAPSHOT_SCHEMA)
-        return self.spark.read.schema(SNAPSHOT_SCHEMA).parquet(self._snapshots_dir)
+        return self._view("snapshots")
 
     # ------------------------------------------------------------------ reads
     def get_aggregate_events(
@@ -218,11 +257,11 @@ class EventStore:
     ) -> list[dict]:
         """S2 driver-side: the rows of ``get_aggregate_events`` as dicts of
         ``id, aggregate_version, kind, body``, in fold order, read from the
-        stream's bucket directory without a Spark job."""
+        stream's files in its bucket head without a Spark job."""
         import pyarrow.dataset as ds
 
         rows = self._read_stream(
-            self._bucket_dir(aggregate_id),
+            "events",
             aggregate_id,
             ["id", "aggregate_version", "kind", "body"],
             where=(ds.field("migration") == 0)
@@ -291,7 +330,7 @@ class EventStore:
         aggregate_version, aggregate_kind, body`` (None when the stream has
         no snapshot), read without a Spark job."""
         rows = self._read_stream(
-            self._snapshots_dir,
+            "snapshots",
             aggregate_id,
             ["id", "aggregate_version", "aggregate_kind", "body"],
             discriminator=self._restrict_disc(discriminator),
@@ -333,26 +372,21 @@ class EventStore:
         ``expected_version+1 ...``; all share one ULID generator so IDs are
         strictly increasing within the write (eventid/eventid.go:170-189).
         Raises ConcurrentModificationError when any (aggregate_id, version)
-        already exists — the reference's unique-index violation.
+        already exists — the reference's unique-index violation — checked
+        against the bucket head the append commits over.
         """
         if not events:
             return "", expected_version
-        discriminator = self._restrict_disc(discriminator)
+        discriminator = self._restrict_disc(discriminator) or {}
         created_at = created_at or datetime.now(timezone.utc)
         agg_hash = fnv1a_32_py(aggregate_id)
-
         versions = [expected_version + 1 + i for i in range(len(events))]
-        with self._commit_lock():
-            return self._append_locked(
-                aggregate_id, aggregate_kind, events, versions,
-                discriminator, created_at, migrated, agg_hash,
-            )
 
-    def _append_locked(
-        self, aggregate_id, aggregate_kind, events, versions,
-        discriminator, created_at, migrated, agg_hash,
-    ) -> tuple[str, int]:
-        last_existing = self._check_conflicts(aggregate_id, versions)
+        def check(head: Head) -> str | None:
+            return self._check_conflicts(head, aggregate_id, versions)
+
+        head = self._logs["events", self._bucket(aggregate_id)].head()
+        last_existing = check(head)
         # per-aggregate ID monotonicity across saves (README.md:389-399):
         # never generate at or before the stream's last ID's millisecond,
         # even under clock skew / equal created_at
@@ -363,14 +397,11 @@ class EventStore:
             last_ms = ulid_millis_py(last_existing)
             base = max(base, datetime.fromtimestamp(last_ms / 1000, tz=timezone.utc))
         gen = UlidGenerator(after=base, now_fn=lambda: base)
-
         rows = []
-        last_id = ""
         for version, (kind, body) in zip(versions, events):
-            last_id = gen.new_id()
             rows.append(
                 (
-                    last_id,
+                    gen.new_id(),
                     aggregate_id,
                     agg_hash,
                     version,
@@ -380,11 +411,11 @@ class EventStore:
                     created_at.replace(tzinfo=None),
                     0,
                     migrated,
-                    discriminator or {},
+                    discriminator,
                 )
             )
-        self._append_rows(rows)
-        return last_id, versions[-1]
+        self._commit_rows("events", aggregate_id, rows, head, check)
+        return rows[-1][0], versions[-1]
 
     def bulk_import(self, events: DataFrame, assign_versions: bool = False) -> None:
         """Set-oriented ingest — the 100 TB load path.
@@ -396,11 +427,11 @@ class EventStore:
         ``ulid_random`` (uniqueness from 80-bit entropy), FNV-1a hashes,
         bucket layout — one distributed write, no driver loop, no
         conflict check (bulk loads own their version integrity;
-        ``assign_versions`` derives 1..N per stream in created_at order).
+        ``assign_versions`` derives 1..N per stream in created_at order),
+        then one commit per bucket.
         """
         from pyspark.sql import Window
 
-        from eventsourcing_spark.functions.hashing import fnv1a_32
         from eventsourcing_spark.functions.ulid import ulid_random
 
         df = events
@@ -447,45 +478,9 @@ class EventStore:
             created_at.replace(tzinfo=None),
             self._restrict_disc(discriminator) or {},
         )
-        import pyarrow.parquet as pq
-
-        # driver-side single-row write, same rationale as _append_rows
-        schema = _ARROW_SNAPSHOT_SCHEMA
-        table = pa.Table.from_pylist([dict(zip(schema.names, row))], schema=schema)
-        os.makedirs(self._snapshots_dir, exist_ok=True)
-        pq.write_table(
-            table,
-            os.path.join(self._snapshots_dir, f"part-{uuid.uuid4().hex}.parquet"),
-        )
+        self._commit_rows("snapshots", aggregate_id, [row])
 
     # -------------------------------------------------------------- internals
-    @contextlib.contextmanager
-    def _commit_lock(self, timeout_s: float = 60.0):
-        """Serialize conflict-check + append across concurrent writers, and
-        appends against the maintenance rewrites (``_rewrite_table``).
-
-        ``os.mkdir`` is atomic on POSIX/shared filesystems — the classic
-        mutex primitive — so the reference's unique-index guarantee
-        (store/postgresql/store.go:702) holds under true concurrency,
-        not just single-writer. On a lakehouse this whole seam is a
-        Delta/Iceberg serializable transaction instead; the reference's
-        own distributed locks (dist/lock.go) play the same role there.
-        """
-        os.makedirs(self.base_dir, exist_ok=True)
-        deadline = time.monotonic() + timeout_s
-        while True:
-            try:
-                os.mkdir(self._lock_dir)
-                break
-            except FileExistsError:
-                if time.monotonic() > deadline:
-                    raise TimeoutError(f"commit lock held too long: {self._lock_dir}")
-                time.sleep(0.02)
-        try:
-            yield
-        finally:
-            os.rmdir(self._lock_dir)
-
     def _restrict_disc(
         self, discriminator: dict[str, str] | None
     ) -> dict[str, str] | None:
@@ -500,36 +495,115 @@ class EventStore:
             if k in self.allowed_discriminator_keys
         }
 
+    def _dir(self, table: str) -> str:
+        return os.path.join(self.base_dir, table)
+
+    def _bucket(self, aggregate_id: str) -> int:
+        return fnv1a_32_py(aggregate_id) % self.n_buckets
+
+    def _pin(self, table: str, buckets=None) -> dict[int, Head]:
+        """The current head of each bucket log (all buckets by default):
+        the version vector a Spark frame and a rewrite of it agree on."""
+        if buckets is None:
+            buckets = range(self.n_buckets)
+        return {b: self._logs[table, b].head() for b in buckets}
+
+    def _paths(self, table: str, rels, resolve: bool = False) -> list[str]:
+        """Absolute paths of committed files. A file is written under
+        ``<table>/_pending/`` and moved to its committed path right after
+        its commit publishes; ``resolve`` looks a missing file up there,
+        for a read that lands between the two."""
+        root = self._dir(table)
+        out = []
+        for rel in rels:
+            path = os.path.join(root, rel)
+            if resolve and not os.path.exists(path):
+                path = os.path.join(root, _PENDING, rel)
+            out.append(path)
+        return out
+
+    def _scan(self, table: str, pin: dict[int, Head]) -> DataFrame:
+        """Spark frame over exactly the files of ``pin``."""
+        from pyspark.errors import AnalysisException
+
+        rels = [p for h in pin.values() for p in h.files]
+        if not rels:
+            return self.spark.createDataFrame([], _SCHEMAS[table])
+        reader = self.spark.read.schema(_SCHEMAS[table])
+        try:
+            return reader.parquet(*self._paths(table, rels))
+        except AnalysisException:
+            return reader.parquet(*self._paths(table, rels, resolve=True))
+
+    def _view(self, table: str, buckets=None) -> DataFrame:
+        """``_scan`` of the current heads; a file a rewrite deleted between
+        the head read and Spark's existence check re-reads the heads."""
+        from pyspark.errors import AnalysisException
+
+        pin = self._pin(table, buckets)
+        while True:
+            try:
+                return self._scan(table, pin)
+            except AnalysisException:
+                fresh = self._pin(table, buckets)
+                if all(fresh[b].version == h.version for b, h in pin.items()):
+                    raise
+                pin = fresh
+
     def _read_stream(
         self,
-        directory: str,
+        table: str,
         aggregate_id: str,
         columns: list[str],
         where=None,
         discriminator: dict[str, str] | None = None,
+        head: Head | None = None,
     ) -> list[dict]:
-        """Driver-side point read of one stream's rows in ``directory``.
+        """Driver-side point read of one stream's rows in ``table``.
 
-        ``directory`` is the stream's bucket directory (events: the bucket
-        layout guarantees every row of the aggregate lives there) or the
-        snapshots directory. pyarrow pushes ``aggregate_id == …`` and the
-        optional ``where`` expression down to row-group statistics, so a
-        single-key read launches no cluster job. The F4 ``discriminator``
-        conjunction runs on the few surviving rows.
+        Reads the files of the stream's bucket ``head`` (the current one
+        by default) that can hold the stream: those whose entry records
+        this ``aggregate_id``, and Spark-written ones, which record none.
+        pyarrow pushes ``aggregate_id == …`` and the optional ``where``
+        expression down to row-group statistics, so a single-key read
+        launches no cluster job. The F4 ``discriminator`` conjunction
+        runs on the few surviving rows. A missing file is looked up under
+        ``_pending/`` (committed, not moved in yet); one that a rewrite
+        deleted after the head was read makes the read start over from
+        the new head, or raise ``FileNotFoundError`` with a given ``head``.
         """
         import pyarrow.dataset as ds
 
-        if not self._exists(directory):
-            return []
+        log = self._logs[table, self._bucket(aggregate_id)]
+        cur = head or log.head()
         flt = ds.field("aggregate_id") == aggregate_id
         if where is not None:
             flt = flt & where
         read = columns + ["discriminator"] if discriminator else columns
-        rows = (
-            ds.dataset(directory, format="parquet")
-            .to_table(columns=read, filter=flt)
-            .to_pylist()
-        )
+        misses = 0
+        while True:
+            rels = [
+                p for p, f in cur.files.items()
+                if f.get("aggregate_id", aggregate_id) == aggregate_id
+            ]
+            if not rels:
+                return []
+            paths = self._paths(table, rels, resolve=misses > 0)
+            try:
+                rows = (
+                    ds.dataset(paths, schema=_ARROW_SCHEMAS[table], format="parquet")
+                    .to_table(columns=read, filter=flt)
+                    .to_pylist()
+                )
+                break
+            except FileNotFoundError:
+                fresh = cur if head is not None else log.head()
+                if fresh.version != cur.version:
+                    cur, misses = fresh, 0
+                elif misses == 2:
+                    raise
+                else:
+                    misses += 1  # committed, maybe still under _pending/
         if discriminator:
             rows = [
                 r for r in rows
@@ -537,13 +611,14 @@ class EventStore:
             ]
         return rows
 
-    def _check_conflicts(self, aggregate_id: str, versions: list[int]) -> str | None:
-        """Single stream-scan over all generations: conflict detection +
-        last existing id. Returns the stream's max id (or None); raises on
-        version clash. Driver-side, so no cluster job runs while the
-        commit lock is held."""
+    def _check_conflicts(
+        self, head: Head, aggregate_id: str, versions: list[int]
+    ) -> str | None:
+        """Single stream read over all generations in ``head``: conflict
+        detection + last existing id. Returns the stream's max id (or
+        None); raises on version clash."""
         rows = self._read_stream(
-            self._bucket_dir(aggregate_id), aggregate_id, ["id", "aggregate_version"]
+            "events", aggregate_id, ["id", "aggregate_version"], head=head
         )
         if not rows:
             return None
@@ -553,94 +628,207 @@ class EventStore:
             )
         return max(r["id"] for r in rows)
 
-    def _bucket_dir(self, aggregate_id: str) -> str:
-        bucket = fnv1a_32_py(aggregate_id) % self.n_buckets
-        return os.path.join(self._events_dir, f"bucket={bucket}")
-
-    def _append_rows(self, rows: list[tuple]) -> None:
-        """Driver-side parquet append for the single-key OLTP path.
-
-        All rows of one append share the aggregate, hence one bucket; a
-        small row batch is written as one parquet file without launching
-        a Spark job (the reference's analog is a one-transaction SQL
-        insert, store/sql.go:39-61). Bulk/distributed writes go through
-        ``bulk_import`` → ``_append_rows_df`` instead.
-        """
+    def _commit_rows(
+        self, table: str, aggregate_id: str, rows, seen: Head | None = None,
+        check=None,
+    ) -> None:
+        """Driver-side commit of one aggregate's rows for the single-key
+        OLTP path: one parquet file, no Spark job (the reference's analog
+        is a one-transaction SQL insert, store/sql.go:39-61), then the
+        next version of the aggregate's bucket log, whose entry records
+        the aggregate. ``check(head)`` conflict-checks against every head
+        the entry is committed over except ``seen``, the one the caller
+        already checked. The file is written under ``_pending/`` and moved
+        into its bucket directory once the commit has published, so a
+        directory reader never sees a rejected append; a failed commit
+        deletes it. Bulk/distributed writes go through ``_append_rows_df``."""
         import pyarrow.parquet as pq
 
-        schema = _ARROW_EVENT_SCHEMA
-        table = pa.Table.from_pylist(
-            [dict(zip(schema.names, row)) for row in rows], schema=schema
-        )
-        bucket_dir = self._bucket_dir(rows[0][1])
-        os.makedirs(bucket_dir, exist_ok=True)
+        bucket = self._bucket(aggregate_id)
+        rel = f"bucket={bucket}/part-{uuid.uuid4().hex}.parquet"
+        pending = os.path.join(self._dir(table), _PENDING, rel)
+        schema = _ARROW_SCHEMAS[table]
+        os.makedirs(os.path.dirname(pending), exist_ok=True)
         pq.write_table(
-            table, os.path.join(bucket_dir, f"part-{uuid.uuid4().hex}.parquet")
+            pa.Table.from_pylist(
+                [dict(zip(schema.names, r)) for r in rows], schema=schema
+            ),
+            pending,
         )
+        entry = {"add": [{
+            "path": rel, "aggregate_id": aggregate_id,
+            "bytes": os.path.getsize(pending),
+        }]}
 
-    def _append_rows_df(self, df: DataFrame) -> None:
-        self._with_bucket(df).write.mode("append").partitionBy("bucket").parquet(
-            self._events_dir
-        )
+        def derive(head: Head) -> dict:
+            if check is not None and (seen is None or head.version != seen.version):
+                check(head)
+            return entry
 
-    def _with_bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "bucket", F.pmod(F.col("aggregate_id_hash"), F.lit(self.n_buckets))
+        try:
+            self._logs[table, bucket].commit(derive)
+        except BaseException:
+            os.remove(pending)
+            raise
+        self._publish(table, [rel])
+
+    def _publish(self, table: str, rels) -> None:
+        """Move committed files from ``_pending/`` to their bucket
+        directories. A file a newer rewrite already removed is gone from
+        both places (``_delete`` clears ``_pending/`` first)."""
+        root = self._dir(table)
+        for rel in rels:
+            path = os.path.join(root, rel)
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            try:
+                os.replace(os.path.join(root, _PENDING, rel), path)
+            except FileNotFoundError:
+                pass
+
+    def _append_rows_df(self, df: DataFrame, pin=None, streams=None) -> None:
+        """Spark-written events, committed bucket by bucket (see
+        ``_commit_staged`` for ``pin`` / ``streams``)."""
+        staging = self._write_staging("events", df)
+        staged = self._move_staged("events", staging)
+        self._commit_staged("events", staged, pin, streams)
+
+    def _write_staging(self, table: str, df: DataFrame, one_file=False) -> str:
+        """Write ``df`` with its ``bucket`` column, partitioned by it, under
+        a fresh ``<table>/_staging-*`` directory (ignored by directory
+        readers; no log lists it). ``one_file``: one id-sorted file per
+        bucket, the rewrite layout."""
+        key = F.col("aggregate_id_hash") if table == "events" else fnv1a_32(
+            F.col("aggregate_id")
         )
+        df = df.withColumn("bucket", F.pmod(key, F.lit(self.n_buckets)))
+        if one_file:
+            df = df.repartition(self.n_buckets, "bucket").sortWithinPartitions("id")
+        staging = os.path.join(self._dir(table), f"_staging-{uuid.uuid4().hex}")
+        try:
+            df.write.partitionBy("bucket").parquet(staging)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        return staging
+
+    def _move_staged(self, table: str, staging: str) -> dict[int, list[dict]]:
+        """Move the staged files under ``_pending/``, where ``_publish``
+        takes them from once their bucket commits, and remove the staging
+        directory; returns each bucket's file entries."""
+        staged: dict[int, list[dict]] = {}
+        try:
+            for part in os.scandir(staging):
+                if not part.name.startswith("bucket="):
+                    continue
+                bucket = int(part.name.split("=", 1)[1])
+                pending = os.path.join(self._dir(table), _PENDING, part.name)
+                os.makedirs(pending, exist_ok=True)
+                for f in os.scandir(part.path):
+                    if f.name.endswith(".parquet"):
+                        rel = f"{part.name}/{f.name}"
+                        size = f.stat().st_size
+                        os.replace(f.path, os.path.join(pending, f.name))
+                        staged.setdefault(bucket, []).append(
+                            {"path": rel, "bytes": size}
+                        )
+        except BaseException:
+            self._delete(table, [f["path"] for fs in staged.values() for f in fs])
+            raise
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+        return staged
+
+    def _delete(self, table: str, rels) -> None:
+        """Delete files, each from ``_pending/`` first and then from its
+        bucket directory: whichever order ``_publish`` runs in against
+        this, the file does not survive."""
+        root = self._dir(table)
+        for rel in rels:
+            for path in (os.path.join(root, _PENDING, rel), os.path.join(root, rel)):
+                try:
+                    os.remove(path)
+                except FileNotFoundError:
+                    pass
+
+    def _commit_staged(
+        self, table, staged, pin=None, streams=None, replace=False
+    ) -> None:
+        """Commit ``staged`` files bucket by bucket, in bucket order.
+
+        ``replace``: each bucket's entry also removes the files ``pin``
+        listed for it; it raises ConcurrentModificationError when a newer
+        commit already removed one (first committer wins), keeps files
+        committed since ``pin`` (concurrent appends are merged), and
+        deletes the removed files once it is published. ``streams`` (a
+        frame with an ``aggregate_id`` column, left on the executors):
+        raise ConcurrentModificationError instead of merging when a file
+        committed since ``pin`` may hold one of them — its entry records
+        no id, or one that a Spark job finds in ``streams``. A bucket
+        that raises leaves the buckets before it committed; its own and
+        later staged files are deleted.
+        """
+        if replace:
+            staged = {b: staged.get(b, []) for b in pin if pin[b].files} | staged
+        buckets = sorted(staged)
+        for i, b in enumerate(buckets):
+            old = pin[b].files if pin else {}
+            remove = list(old) if replace else []
+
+            def derive(head: Head, b=b, old=old, remove=remove) -> dict:
+                if any(p not in head.files for p in remove):
+                    raise ConcurrentModificationError(
+                        f"{table} bucket {b} was rewritten concurrently"
+                    )
+                if streams is not None and _may_hold(
+                    [f for p, f in head.files.items() if p not in old], streams
+                ):
+                    raise ConcurrentModificationError(
+                        f"{table} bucket {b}: a stream being rewritten "
+                        "was appended to concurrently"
+                    )
+                return {"remove": remove, "add": staged[b]}
+
+            try:
+                self._logs[table, b].commit(derive)
+            except BaseException:
+                self._delete(table, [f["path"] for c in buckets[i:] for f in staged[c]])
+                raise
+            self._publish(table, [f["path"] for f in staged[b]])
+            self._delete(table, remove)
 
     def _rewrite_table(
-        self, table: str, df: DataFrame, files_per_bucket: int | None = None
+        self, table: str, df: DataFrame, pin: dict[int, Head], streams=None
     ) -> int:
-        """Replace the ``events`` or ``snapshots`` table with ``df``; returns
-        its row count. The one rewrite path of the maintenance operators —
-        parquet has no UPDATE/DELETE, so on Delta/Iceberg this method
-        becomes their ``UPDATE``/``MERGE``/``OPTIMIZE`` transaction.
+        """Replace the files ``pin`` lists in the ``events`` or ``snapshots``
+        table with ``df``, built from ``_scan(table, pin)``; returns its row
+        count. The one rewrite path of the maintenance operators — parquet
+        has no UPDATE/DELETE, so on Delta/Iceberg this method becomes their
+        ``UPDATE``/``MERGE``/``OPTIMIZE`` transaction.
 
-        The caller holds ``_commit_lock`` and builds ``df`` under it:
-        Spark lists the table's files when the frame is built, so a
-        concurrent append either commits before that listing or waits for
-        the swap. ``df`` is written to a sibling temp directory (events
-        bucketed as ``_append_rows_df`` writes them; ``files_per_bucket``
-        shuffles each bucket into that many tasks sorted by ``id``, the
-        compaction layout), read back with the explicit schema, and
-        swapped in only if its (row count, order-free id fingerprint)
-        equals ``df``'s; any failure removes the temp directory and
-        leaves the table untouched.
+        ``df`` is staged as one id-sorted file per bucket, read back with
+        the explicit schema and published bucket by bucket (``_commit_staged``
+        with ``replace``) only if its (row count, order-free id
+        fingerprint) equals ``df``'s; a mismatch deletes the staged files
+        and publishes nothing.
         """
-        if not os.path.isdir(self._lock_dir):
-            raise RuntimeError("_rewrite_table needs the commit lock held")
-        path, schema = {
-            "events": (self._events_dir, EVENT_SCHEMA),
-            "snapshots": (self._snapshots_dir, SNAPSHOT_SCHEMA),
-        }[table]
+        schema = _SCHEMAS[table]
         df = df.select(*schema.names)
         expected = _fingerprint(df)
-        tmp = f"{path}.rewrite-{uuid.uuid4().hex[:8]}"
+        staging = self._write_staging(table, df, one_file=True)
         try:
-            if table == "events":
-                df, schema = self._with_bucket(df), self._bucketed(schema)
-                if files_per_bucket:
-                    df = df.repartition(
-                        self.n_buckets * files_per_bucket, "bucket"
-                    ).sortWithinPartitions("id")
-                writer = df.write.partitionBy("bucket")
-            else:
-                writer = df.write
-            writer.mode("overwrite").parquet(tmp)
-            written = _fingerprint(self.spark.read.schema(schema).parquet(tmp))
+            written = _fingerprint(
+                self.spark.read.schema(self._bucketed(schema)).parquet(staging)
+            )
             if written != expected:
                 raise RuntimeError(
                     f"{table} rewrite verification failed: (rows, fingerprint) "
                     f"{expected} -> {written}; table left untouched"
                 )
         except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
+            shutil.rmtree(staging, ignore_errors=True)
             raise
-        old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-        if os.path.isdir(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
+        staged = self._move_staged(table, staging)
+        self._commit_staged(table, staged, pin, streams, replace=True)
         return expected[0]
 
     @staticmethod
@@ -649,9 +837,4 @@ class EventStore:
 
         return T.StructType(
             list(schema.fields) + [T.StructField("bucket", T.IntegerType(), True)]
-        )
-
-    def _exists(self, path: str) -> bool:
-        return os.path.isdir(path) and any(
-            not n.startswith((".", "_")) for n in os.listdir(path)
         )

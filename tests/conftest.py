@@ -22,3 +22,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return TESTDATA
+
+
+@pytest.fixture()
+def store_backend():
+    """The commit-log backend for stores built with ``new_store``, from the
+    store's base directory: None = the default ``FileCasBackend`` under
+    ``<base>/_log``. ``tests/test_store_memory_backend.py`` overrides it
+    to rerun the store suites over ``MemoryCasBackend``."""
+    return lambda base: None
+
+
+@pytest.fixture()
+def new_store(spark, store_backend):
+    """``new_store(base, **kwargs)``: an EventStore over ``store_backend``."""
+    from eventsourcing_spark.store import EventStore
+
+    def make(base, **kwargs):
+        return EventStore(spark, str(base), backend=store_backend(str(base)), **kwargs)
+
+    return make

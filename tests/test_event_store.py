@@ -27,8 +27,8 @@ T0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
 
 
 @pytest.fixture()
-def store(spark, tmp_path):
-    return EventStore(spark, str(tmp_path / "es"), snapshot_threshold=3)
+def store(new_store, tmp_path):
+    return new_store(str(tmp_path / "es"), snapshot_threshold=3)
 
 
 def seed_golden_account(store: EventStore, agg_id: str = "acc-1") -> None:
@@ -204,10 +204,8 @@ def test_filters_and_range_scan(store):
     } == {"t-abc", "t-xyz"}
 
 
-def test_allowed_discriminator_keys(spark, tmp_path):
-    store = EventStore(
-        spark, str(tmp_path / "es2"), allowed_discriminator_keys=("tenant",)
-    )
+def test_allowed_discriminator_keys(new_store, tmp_path):
+    store = new_store(tmp_path / "es2", allowed_discriminator_keys=("tenant",))
     store.append(
         "a1", "Account", [(KIND_CREATED, {"money": 1, "owner": "O"})],
         expected_version=0,
@@ -218,13 +216,13 @@ def test_allowed_discriminator_keys(spark, tmp_path):
     assert dict(row.discriminator) == {"tenant": "abc"}
 
 
-def test_bucket_pruning_matches_full_scan(spark, tmp_path):
+def test_bucket_pruning_matches_full_scan(new_store, tmp_path):
     """S2/S3 bucket pruning is an access path, never a semantics change."""
     from datetime import datetime, timezone
 
-    from eventsourcing_spark.store import EventStore, Filter
+    from eventsourcing_spark.store import Filter
 
-    store = EventStore(spark, str(tmp_path / "prune"), n_buckets=8)
+    store = new_store(str(tmp_path / "prune"), n_buckets=8)
     t0 = datetime(2024, 3, 1, tzinfo=timezone.utc)
     for i in range(12):
         store.append(
@@ -232,10 +230,10 @@ def test_bucket_pruning_matches_full_scan(spark, tmp_path):
             [("AccountCreated", {"money": i, "owner": "x"})],
             expected_version=0, created_at=t0,
         )
-    # single-stream read prunes to the stream's bucket directory
+    # single-stream read scans only the files of the stream's bucket
     s2 = store.get_aggregate_events("agg-3")
-    plan = s2._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bucket" in plan
+    bucket_dir = f"/events/bucket={fnv1a_32_py('agg-3') % 8}/"
+    assert s2.inputFiles() and all(bucket_dir in f for f in s2.inputFiles())
     assert s2.count() == 1
     # split-filtered scan: pruned result == row-predicate result
     f = Filter(splits=4, split_ids=(0, 2))
@@ -253,13 +251,13 @@ def test_bucket_pruning_matches_full_scan(spark, tmp_path):
     )
 
 
-def test_driver_side_reads_match_views_across_writers(spark, tmp_path):
+def test_driver_side_reads_match_views_across_writers(spark, new_store, tmp_path):
     """``read_aggregate_events`` / ``read_snapshot`` return exactly what the
     S2 / S5 DataFrame views return, over bucket and snapshot directories
     holding files of every writer: ``bulk_import`` (Spark), ``append`` and
     ``save_snapshot`` (pyarrow), and the ``forget`` / ``migrate_in_place``
     rewrites (Spark, leaving ``migration > 0`` generations)."""
-    store = EventStore(spark, str(tmp_path / "mixed"), n_buckets=2)
+    store = new_store(str(tmp_path / "mixed"), n_buckets=2)
     tenant = {"tenant": "abc"}
     imported = spark.createDataFrame(
         [
@@ -343,3 +341,90 @@ def test_driver_side_reads_match_views_across_writers(spark, tmp_path):
                 )
                 compared += len(got)
     assert compared > 0
+
+
+def test_point_read_opens_the_same_files_at_10_and_2000_per_bucket(
+    spark, new_store, tmp_path, monkeypatch
+):
+    """A point read opens the files its bucket head says can hold the
+    stream — its own appends and Spark-written files — so the count does
+    not grow with other streams' appends to the bucket (counted with a
+    spy on ``pyarrow.dataset.dataset``)."""
+    import pyarrow.dataset as ds
+
+    store = new_store(tmp_path / "files", n_buckets=1)
+    store.bulk_import(spark.createDataFrame(
+        [("bulk-1", "Account", KIND_CREATED, '{"money":1,"owner":"B"}', T0, 1)],
+        "aggregate_id string, aggregate_kind string, kind string, body string, "
+        "created_at timestamp, aggregate_version int",
+    ))
+    for v in range(2):
+        store.append("target", "Account", [(KIND_DEPOSITED, {"money": v})],
+                     expected_version=v, created_at=T0)
+    opened = []
+    real = ds.dataset
+
+    def spy(source, *args, **kwargs):
+        opened.append(len(source))
+        return real(source, *args, **kwargs)
+
+    monkeypatch.setattr(ds, "dataset", spy)
+    counts = {}
+    for total in (10, 2000):
+        n = sum(len(h.files) for h in store._pin("events").values())
+        for i in range(n, total):
+            store.append(f"other-{i}", "Account", [(KIND_CREATED, {"money": i})],
+                         expected_version=0, created_at=T0)
+        assert sum(len(h.files) for h in store._pin("events").values()) == total
+        opened.clear()
+        assert len(store.read_aggregate_events("target")) == 2
+        counts[total] = sum(opened)
+    assert counts[10] == counts[2000] == 3  # two appends + the bulk file
+
+
+def test_store_refuses_data_without_its_log(spark, new_store, tmp_path):
+    """A directory holding table data opens only with the log that
+    describes it, and only with the bucket count it was created with."""
+    from eventsourcing_spark.cas import MemoryCasBackend
+
+    store = new_store(tmp_path / "s", n_buckets=2)
+    store.append("a", "Account", [(KIND_CREATED, {"money": 1})],
+                 expected_version=0, created_at=T0)
+    with pytest.raises(ValueError, match="no commit log"):
+        EventStore(spark, str(tmp_path / "s"), backend=MemoryCasBackend())
+    with pytest.raises(ValueError, match="created with"):
+        EventStore(spark, str(tmp_path / "s"), n_buckets=4, backend=store.backend)
+    again = EventStore(spark, str(tmp_path / "s"), n_buckets=2, backend=store.backend)
+    assert [r["aggregate_version"] for r in again.read_aggregate_events("a")] == [1]
+
+
+def test_reads_find_a_commit_whose_file_is_not_moved_in_yet(
+    new_store, tmp_path, monkeypatch
+):
+    """An append's file waits under ``events/_pending/`` until its commit
+    has published. A driver-side read, a Spark view and the next
+    append's conflict check made between the commit and the move all
+    find it."""
+    store = new_store(tmp_path / "pending", n_buckets=2)
+    store.append("a", "Account", [(KIND_CREATED, {"money": 1, "owner": "O"})],
+                 expected_version=0, created_at=T0)
+    seen = []
+    real = EventStore._publish
+
+    def publish(self, table, rels):
+        if table == "events" and not seen:
+            assert not (tmp_path / "pending/events" / rels[0]).exists()
+            seen.append([r["aggregate_version"] for r in self.read_aggregate_events("a")])
+            seen.append(sorted(
+                r.aggregate_version for r in self.get_aggregate_events("a").collect()
+            ))
+            with pytest.raises(ConcurrentModificationError):
+                self.append("a", "Account", [(KIND_DEPOSITED, {"money": 3})],
+                            expected_version=1, created_at=T0)
+        real(self, table, rels)
+
+    monkeypatch.setattr(EventStore, "_publish", publish)
+    store.append("a", "Account", [(KIND_DEPOSITED, {"money": 2})],
+                 expected_version=1, created_at=T0)
+    assert seen == [[1, 2], [1, 2]]
+    assert [r["aggregate_version"] for r in store.read_aggregate_events("a")] == [1, 2]

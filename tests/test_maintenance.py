@@ -14,7 +14,6 @@ from pyspark.sql.readwriter import DataFrameWriter
 
 from eventsourcing_spark.maintenance import compact_events, forget, migrate_in_place
 from eventsourcing_spark.maintenance.migration import KIND_INVALIDATED
-from eventsourcing_spark.store import EventStore
 from eventsourcing_spark.store.codec import JsonCodec
 
 from tests.account import (
@@ -28,10 +27,10 @@ T0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
 T1 = T0 + timedelta(hours=1)
 
 
-def test_forget_golden(spark, tmp_path):
+def test_forget_golden(new_store, tmp_path):
     """Bodies scrubbed (owner blanked) in events + snapshots; counts and
     all other fields intact (test/pg/store_test.go:373-482)."""
-    store = EventStore(spark, str(tmp_path / "fg"))
+    store = new_store(str(tmp_path / "fg"))
     last_id, _ = store.append(
         "acc-f", "Account",
         [
@@ -104,10 +103,10 @@ def migration_handler(events):
     return out
 
 
-def test_migration_copy_replace_golden(spark, tmp_path):
+def test_migration_copy_replace_golden(new_store, tmp_path):
     """4-event stream → 9 rows: v1-4 migration=1, v5 Invalidated,
     v6-9 migrated _V2 (test/pg/store_test.go:484-633)."""
-    store = EventStore(spark, str(tmp_path / "mg"))
+    store = new_store(str(tmp_path / "mg"))
     last_id, _ = store.append(
         "acc-m", "Account",
         [
@@ -188,7 +187,7 @@ def test_migration_copy_replace_golden(spark, tmp_path):
     )
 
 
-def test_migration_ids_unique_across_fnv_colliding_streams(spark, tmp_path):
+def test_migration_ids_unique_across_fnv_colliding_streams(new_store, tmp_path):
     """Two streams whose aggregate_id FNV-31 hashes COLLIDE must still get
     globally unique migration event ids — the reference guarantees this
     via 80-bit random ULID entropy (eventid/eventid.go); here via a
@@ -199,7 +198,7 @@ def test_migration_ids_unique_across_fnv_colliding_streams(spark, tmp_path):
     a, b = "acc-198824", "acc-568140"  # brute-forced FNV-31 collision
     assert fnv1a_32_py(a) == fnv1a_32_py(b)
 
-    store = EventStore(spark, str(tmp_path / "col"), n_buckets=4)
+    store = new_store(str(tmp_path / "col"), n_buckets=4)
     for agg in (a, b):
         store.append(
             agg, "Account",
@@ -225,7 +224,7 @@ def test_migration_ids_unique_across_fnv_colliding_streams(spark, tmp_path):
         assert [r.id for r in srows] == sorted(r.id for r in srows)
 
 
-def test_vacuum_all_dropped_keeps_store_readable(spark, tmp_path):
+def test_vacuum_all_dropped_keeps_store_readable(new_store, tmp_path):
     """n_keep == 0 path: vacuuming a store whose every generation is
     invalidated must not crash on read-back schema inference, must not
     leak the tmp dir, and must leave an empty-but-readable store."""
@@ -233,22 +232,25 @@ def test_vacuum_all_dropped_keeps_store_readable(spark, tmp_path):
 
     from eventsourcing_spark.maintenance import vacuum_migrated
 
-    store = EventStore(spark, str(tmp_path / "vz"), n_buckets=4)
+    store = new_store(str(tmp_path / "vz"), n_buckets=4)
     store.append(
         "acc-z", "Account", [(KIND_CREATED, {"money": 1, "owner": "A B"})],
         expected_version=0, created_at=T0,
     )
     # invalidate EVERY row by hand (simulates an aborted migration whose
     # new generation was already vacuumed): migration=1 on all rows
-    with store._commit_lock():
-        store._rewrite_table(
-            "events", store.events_raw().withColumn("migration", F.lit(1))
-        )
+    pin = store._pin("events")
+    store._rewrite_table(
+        "events",
+        store._scan("events", pin).withColumn("migration", F.lit(1)),
+        pin,
+    )
 
     stats = vacuum_migrated(store)
     assert stats["rows_after"] == 0 and stats["rows_dropped"] == 1
     assert store.events_raw().count() == 0  # readable empty store
     assert not glob.glob(str(tmp_path / "vz/events.*"))  # no tmp/old leak
+    assert not glob.glob(str(tmp_path / "vz/events/_staging-*"))
     # still appendable after the wipe
     store.append(
         "acc-z2", "Account", [(KIND_CREATED, {"money": 2, "owner": "C"})],
@@ -276,8 +278,8 @@ def test_upcaster_chain_reads_old_bodies(spark):
     assert (kind2, body2) == (kind, body)
 
 
-def test_compaction_preserves_data_and_reduces_files(spark, tmp_path):
-    store = EventStore(spark, str(tmp_path / "cp"), n_buckets=4)
+def test_compaction_preserves_data_and_reduces_files(new_store, tmp_path):
+    store = new_store(str(tmp_path / "cp"), n_buckets=4)
     for i in range(20):
         store.append(
             f"acc-{i}", "Account",
@@ -294,16 +296,13 @@ def test_compaction_preserves_data_and_reduces_files(spark, tmp_path):
     assert n_files_after <= 4 < n_files_before
 
 
-def test_compaction_small_files(spark, tmp_path):
+def test_compaction_small_files(new_store, tmp_path):
     """File-per-append layout → compaction: file count collapses, rows
     and the active view survive bit-exact, and the store stays writable
     with optimistic concurrency intact."""
-    from eventsourcing_spark.maintenance.compaction import (
-        _dir_stats,
-        compact_events,
-    )
+    from eventsourcing_spark.maintenance.compaction import compact_events
 
-    store = EventStore(spark, str(tmp_path / "cp"), n_buckets=4)
+    store = new_store(str(tmp_path / "cp"), n_buckets=4)
     # 12 appends → 12 parquet files across 4 bucket dirs
     for i in range(12):
         store.append(
@@ -312,7 +311,7 @@ def test_compaction_small_files(spark, tmp_path):
             expected_version=0, created_at=T0,
         )
     before_rows = store.events().orderBy("id").collect()
-    files_before, _ = _dir_stats(store._events_dir)
+    files_before = sum(len(h.files) for h in store._pin("events").values())
     assert files_before == 12
 
     stats = compact_events(store)
@@ -339,20 +338,20 @@ def test_compaction_small_files(spark, tmp_path):
         )
 
 
-def test_compaction_empty_store_noop(spark, tmp_path):
+def test_compaction_empty_store_noop(new_store, tmp_path):
     from eventsourcing_spark.maintenance.compaction import compact_events
 
-    store = EventStore(spark, str(tmp_path / "empty"))
+    store = new_store(str(tmp_path / "empty"))
     stats = compact_events(store)
     assert stats == {"files_before": 0, "files_after": 0, "bytes": 0, "rows": 0}
 
 
-def test_vacuum_drops_invalidated_generations(spark, tmp_path):
+def test_vacuum_drops_invalidated_generations(new_store, tmp_path):
     """M2 then vacuum: the superseded generation disappears physically,
     the active view is unchanged, and keep_revisions retains history."""
     from eventsourcing_spark.maintenance import vacuum_migrated
 
-    store = EventStore(spark, str(tmp_path / "vac"), n_buckets=4)
+    store = new_store(str(tmp_path / "vac"), n_buckets=4)
     store.append(
         "acc-v", "Account",
         [(KIND_CREATED, {"money": 100, "owner": "A B"}),
@@ -387,11 +386,9 @@ def test_vacuum_drops_invalidated_generations(spark, tmp_path):
 class _WriterInsideRewrite(threading.Thread):
     """Runs ``write(store)`` on a thread started from inside a maintenance
     operator: at its first parquet write under the events directory, i.e.
-    after the operator's frame has listed the table's files. The write
-    then gets up to 2 s to finish before the operator's write proceeds.
-    An unlocked rewrite lets the append land in the directory about to be
-    swapped out; under the commit lock the append waits for the swap, so
-    the outcome does not depend on timing."""
+    after the operator read the bucket heads its frame is built from. The
+    write then gets up to 2 s to finish before the operator's write
+    proceeds, so it commits before the rewrite's bucket commits."""
 
     def __init__(self, monkeypatch, store, write):
         super().__init__(daemon=True)
@@ -416,7 +413,7 @@ class _WriterInsideRewrite(threading.Thread):
     def outcome(self):
         assert self.ident is not None, "the operator never wrote the table"
         self.join(timeout=60)
-        assert not self.is_alive(), "append still blocked after the rewrite"
+        assert not self.is_alive(), "append still running after the rewrite"
         return self.result, self.error
 
 
@@ -443,11 +440,11 @@ _OPERATORS = {
 
 
 @pytest.mark.parametrize("op", sorted(_OPERATORS))
-def test_appends_during_rewrite_survive(spark, tmp_path, monkeypatch, op):
+def test_appends_during_rewrite_survive(new_store, tmp_path, monkeypatch, op):
     """Every append that returns while a maintenance operator rewrites the
     events table is in the table afterwards (the reference's rewrites are
     SQL transactions, store/postgresql/store.go:446-495)."""
-    store = EventStore(spark, str(tmp_path / op), n_buckets=4)
+    store = new_store(str(tmp_path / op), n_buckets=4)
     _seed_account(store)
 
     def write(store):
@@ -468,46 +465,70 @@ def test_appends_during_rewrite_survive(spark, tmp_path, monkeypatch, op):
 
 
 def test_migration_guard_rejects_concurrent_stale_append(
-    spark, tmp_path, monkeypatch
+    new_store, tmp_path, monkeypatch
 ):
-    """A writer that read the stream before the migration and appends at
-    the pre-migration ``expected_version`` while it runs collides with the
-    Invalidated guard (events_migration.go:96-110) instead of committing
-    an event the swap then drops."""
+    """A writer that read the stream before the migration appends at the
+    pre-migration ``expected_version``; first committer wins per stream,
+    as the reference's unique index decides (events_migration.go:96-110).
+
+    * The stale append commits first (while the migration stages its
+      rewrite): the migration's bucket commit raises, and the stream's
+      active versions stay unique.
+    * The migration commits first: the stale append collides with the
+      Invalidated guard's version."""
     from eventsourcing_spark.store.event_store import ConcurrentModificationError
 
-    store = EventStore(spark, str(tmp_path / "guard"), n_buckets=4)
-    _seed_account(store)
-
-    writer = _WriterInsideRewrite(
-        monkeypatch, store,
-        lambda store: store.append(
+    def stale_append(store):
+        return store.append(
             "acc-m", "Account", [(KIND_DEPOSITED, {"money": 5})],
             expected_version=2, created_at=T1,
-        ),
-    )
-    assert _OPERATORS["migrate"](store) == 1
+        )
+
+    def versions(store):
+        return [
+            (r.aggregate_version, r.kind)
+            for r in store.events().filter(F.col("aggregate_id") == "acc-m")
+            .orderBy("aggregate_version").collect()
+        ]
+
+    store = new_store(tmp_path / "append-first", n_buckets=4)
+    _seed_account(store)
+    writer = _WriterInsideRewrite(monkeypatch, store, stale_append)
+    with pytest.raises(ConcurrentModificationError):
+        _OPERATORS["migrate"](store)
     _, error = writer.outcome()
-    assert isinstance(error, ConcurrentModificationError)
-    kinds = [
-        r.kind for r in store.events().filter(F.col("aggregate_id") == "acc-m")
-        .orderBy("aggregate_version").collect()
+    assert error is None
+    assert versions(store) == [
+        (1, KIND_CREATED), (2, KIND_OWNER_UPDATED), (3, KIND_DEPOSITED)
     ]
-    assert kinds == [KIND_INVALIDATED, KIND_CREATED + "_V2", KIND_OWNER_UPDATED + "_V2"]
+    monkeypatch.undo()
+
+    store = new_store(tmp_path / "migration-first", n_buckets=4)
+    _seed_account(store)
+    assert _OPERATORS["migrate"](store) == 1
+    with pytest.raises(ConcurrentModificationError):
+        stale_append(store)
+    assert versions(store) == [
+        (3, KIND_INVALIDATED),
+        (4, KIND_CREATED + "_V2"),
+        (5, KIND_OWNER_UPDATED + "_V2"),
+    ]
 
 
 def test_rewrite_verification_mismatch_leaves_table_untouched(
-    spark, tmp_path, monkeypatch
+    new_store, tmp_path, monkeypatch
 ):
-    """A rewrite whose read-back disagrees with its frame raises, removes
-    its temp directory, releases the lock and keeps the old table."""
+    """A rewrite whose read-back disagrees with its frame raises, publishes
+    no log version, removes its staged files and keeps the old table."""
     import glob
 
     from eventsourcing_spark.store import event_store
 
-    store = EventStore(spark, str(tmp_path / "vf"), n_buckets=4)
+    store = new_store(tmp_path / "vf", n_buckets=4)
     _seed_account(store)
     before = sorted(tuple(r) for r in store.events().collect())
+    heads = store._pin("events")
+    files = sorted(glob.glob(str(tmp_path / "vf/events/**"), recursive=True))
     real = event_store._fingerprint
     calls = []
 
@@ -519,20 +540,77 @@ def test_rewrite_verification_mismatch_leaves_table_untouched(
     monkeypatch.setattr(event_store, "_fingerprint", skewed)
     with pytest.raises(RuntimeError, match="verification failed"):
         _OPERATORS["forget"](store)
+    assert store._pin("events") == heads
+    assert sorted(glob.glob(str(tmp_path / "vf/events/**"), recursive=True)) == files
     assert sorted(tuple(r) for r in store.events().collect()) == before
-    assert not glob.glob(str(tmp_path / "vf/events.*"))
-    assert not glob.glob(str(tmp_path / "vf/_commit.lock"))
-    with pytest.raises(RuntimeError, match="commit lock"):
-        store._rewrite_table("events", store.events_raw())
 
 
-def test_rewrite_stress_many_writers(spark, tmp_path):
+def test_bulk_import_during_rewrite_survives(spark, new_store, tmp_path, monkeypatch):
+    """A ``bulk_import`` that commits while compaction rewrites the table
+    keeps all its rows: it commits to the bucket logs like an append, and
+    the rewrite's bucket commits merge it."""
+    store = new_store(tmp_path / "bulk", n_buckets=4)
+    _seed_account(store)
+    batch = spark.createDataFrame(
+        [(f"bulk-{i}", "Wallet", KIND_DEPOSITED, json.dumps({"money": i}), T1, 1)
+         for i in range(5)],
+        "aggregate_id string, aggregate_kind string, kind string, body string, "
+        "created_at timestamp, aggregate_version int",
+    )
+    writer = _WriterInsideRewrite(
+        monkeypatch, store, lambda store: store.bulk_import(batch)
+    )
+    compact_events(store)
+    _, error = writer.outcome()
+    assert error is None
+    ids = {r.aggregate_id for r in store.events().collect()}
+    assert ids == {"acc-m"} | {f"bulk-{i}" for i in range(5)}
+
+
+def test_point_reads_during_rewrite_publish(new_store, tmp_path, monkeypatch):
+    """``read_aggregate_events`` and ``Repository.retrieve`` made at every
+    file move or delete of a compaction's publish step return the whole
+    stream, never ``[]`` or version 0."""
+    import os
+
+    from eventsourcing_spark.store.repository import Repository
+
+    from tests.account import HANDLERS, init_state
+
+    store = new_store(tmp_path / "pub", n_buckets=4)
+    _seed_account(store)
+    repo = Repository(store, "Account", HANDLERS, init_state)
+    seen, busy = [], []
+
+    def probing(real):
+        def op(*args, **kwargs):
+            out = real(*args, **kwargs)
+            if not busy:  # no probe from inside a probe
+                busy.append(True)
+                try:
+                    seen.append((
+                        len(store.read_aggregate_events("acc-m")),
+                        repo.retrieve("acc-m").version,
+                    ))
+                finally:
+                    busy.clear()
+            return out
+        return op
+
+    for name in ("rename", "replace", "remove"):
+        monkeypatch.setattr(os, name, probing(getattr(os, name)))
+    compact_events(store)
+    monkeypatch.undo()
+    assert seen and set(seen) == {(2, 2)}, seen
+
+
+def test_rewrite_stress_many_writers(new_store, tmp_path):
     """Six writer threads (more than this suite's cores) append fresh
     streams with a shortened switch interval for as long as compaction
     runs; every append that returned is in the table afterwards."""
     import sys
 
-    store = EventStore(spark, str(tmp_path / "stress"), n_buckets=4)
+    store = new_store(str(tmp_path / "stress"), n_buckets=4)
     _seed_account(store)
     done = threading.Event()
     appended, errors = [], []

@@ -3,7 +3,8 @@
 Builds a real EventStore from the driver's sf events table (bulk_import:
 the 100 TB load path), then times the operator envelope the reference
 cares about: S2/S3/S5 reads (the S2 DataFrame scan and, beside it, the
-driver-side S2+S5 point read that ``Repository`` uses), the A1 full
+driver-side S2+S5 point read that ``Repository`` uses, at 10 and at 2000
+event files in the stream's bucket), the A1 full
 rehydration fold, catch-up replay end-to-end, and live-phase micro-batch
 latency.
 
@@ -41,6 +42,32 @@ def best_of(n: int, fn) -> float:
     return round(best, 3)
 
 
+def point_read_by_files(spark, base: str) -> dict[str, float]:
+    """S2+S5 driver-side point read of one stream (latest snapshot plus
+    the tail after it, no Spark job) in a one-bucket store, once the
+    bucket holds 10 and again once it holds 2000 driver-appended event
+    files, keyed by that file count; best of five."""
+    store = EventStore(spark, base, n_buckets=1)
+    last_id, v = store.append(
+        "target", "Account", [("view", {"value": i}) for i in range(3)], 0
+    )
+    store.save_snapshot(last_id, "target", v, "Account", {"n": 3})
+    store.append("target", "Account", [("view", {"value": 3})], v)
+    out, files = {}, 2
+    for total in (10, 2000):
+        for i in range(files, total):
+            store.append(f"other-{i}", "Account", [("view", {"value": i})], 0)
+        files = total
+        out[str(total)] = best_of(
+            5,
+            lambda: (
+                store.read_snapshot("target"),
+                store.read_aggregate_events("target", v),
+            ),
+        )
+    return out
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark("es-perf")
@@ -72,15 +99,9 @@ def main() -> None:
         out["s2_stream_scan_sec"] = best_of(
             2, lambda: store.get_aggregate_events(some_id).collect()
         )
-        # --- S2+S5 driver-side point read (the Repository.retrieve path:
-        # latest snapshot + tail, pyarrow over one bucket, no Spark job;
-        # this store has no snapshots, so S5 only finds none) ------------
-        out["s2_s5_point_read_sec"] = best_of(
-            2,
-            lambda: (
-                store.read_snapshot(some_id),
-                store.read_aggregate_events(some_id),
-            ),
+        # --- S2+S5 driver-side point read (the Repository.retrieve path)
+        out["s2_s5_point_read_sec"] = point_read_by_files(
+            spark, os.path.join(base, "point")
         )
         # --- S3 keyset range scan (first 1000 by id) --------------------
         bounds = store.events().agg(
