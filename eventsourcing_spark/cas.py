@@ -81,6 +81,12 @@ class CasBackend:
     def list_keys(self, prefix: str = "") -> list[str]:
         raise NotImplementedError
 
+    def shared(self) -> CasBackend:
+        """A picklable backend over the same keys, for another process (a
+        Spark Python worker). File and object-store backends are their
+        own; ``MemoryCasBackend`` serves itself on a localhost port."""
+        return self
+
 
 class FileCasBackend(CasBackend):
     """POSIX implementation rooted at a directory; one key = one file.
@@ -224,6 +230,7 @@ class MemoryCasBackend(CasBackend):
         self._lock = threading.Lock()
         self._counter = 0
         self.on_op = on_op
+        self._served: _RemoteCasBackend | None = None
 
     def _hook(self, op: str, key: str) -> None:
         if self.on_op is not None:
@@ -274,7 +281,94 @@ class MemoryCasBackend(CasBackend):
         with self._lock:
             return sorted(k for k in self._store if k.startswith(prefix))
 
+    def shared(self) -> CasBackend:
+        with self._lock:
+            if self._served is None:
+                self._served = _serve(self)
+            return self._served
+
     # ------------------------------------------------------- test support
     def rewind(self, key: str, seconds: float) -> None:
         with self._lock:
             self._store[key][2] -= seconds
+
+
+_OPS = ("put_if_absent", "get", "touch", "delete_if", "list_keys")
+
+
+def _serve(backend: CasBackend) -> _RemoteCasBackend:
+    """Serve ``backend``'s operations on a localhost port, from daemon
+    threads, for the life of this process; returns the client."""
+    from multiprocessing import AuthenticationError
+    from multiprocessing.connection import Listener
+
+    authkey = os.urandom(16)
+    listener = Listener(("127.0.0.1", 0), authkey=authkey)
+
+    def answer(conn) -> None:
+        with conn:
+            while True:
+                try:
+                    op, args = conn.recv()
+                except EOFError:
+                    return
+                try:
+                    if op not in _OPS:
+                        raise ValueError(f"unknown CAS operation {op!r}")
+                    conn.send((True, getattr(backend, op)(*args)))
+                except Exception as e:  # noqa: BLE001 — re-raised by the client
+                    conn.send((False, e))
+
+    def accept() -> None:
+        while True:
+            try:
+                conn = listener.accept()
+            except (AuthenticationError, EOFError, OSError):  # a failed handshake
+                continue
+            threading.Thread(target=answer, args=(conn,), daemon=True).start()
+
+    threading.Thread(target=accept, daemon=True, name="cas-serve").start()
+    return _RemoteCasBackend(listener.address, authkey)
+
+
+class _RemoteCasBackend(CasBackend):
+    """Client of a backend served by ``_serve``: each operation is one
+    round trip on a connection kept per process."""
+
+    def __init__(self, address, authkey: bytes):
+        self.address, self.authkey = address, authkey
+        self._conn = None
+        self._lock = threading.Lock()
+
+    def __getstate__(self):
+        return (self.address, self.authkey)
+
+    def __setstate__(self, state) -> None:
+        self.__init__(*state)
+
+    def _call(self, op: str, *args):
+        from multiprocessing.connection import Client
+
+        with self._lock:
+            if self._conn is None:
+                self._conn = Client(self.address, authkey=self.authkey)
+            self._conn.send((op, args))
+            ok, value = self._conn.recv()
+        if not ok:
+            raise value
+        return value
+
+    def put_if_absent(self, key: str, data: bytes) -> str | None:
+        return self._call("put_if_absent", key, data)
+
+    def get(self, key: str) -> CasEntry | None:
+        return self._call("get", key)
+
+    def touch(self, key: str, expected: str) -> str | None:
+        return self._call("touch", key, expected)
+
+    def delete_if(self, key: str, expected: str) -> bool:
+        return self._call("delete_if", key, expected)
+
+    def list_keys(self, prefix: str = "") -> list[str]:
+        return self._call("list_keys", prefix)

@@ -27,12 +27,18 @@ it. It is the Delta Lake transaction log reduced to what they need
   the next read probes only the next version's key. ``vacuum`` deletes
   entries in ascending order and only below a checkpoint, so a cached
   head whose own entry is gone is reloaded from the checkpoints.
+* **Replay.** ``entries(after, upto)`` reads the entries between two
+  versions in order and ``head_at(version)`` the files at a version —
+  the per-bucket version vector of the event store is the offset of its
+  change feed (``store/feed.py``). An entry that ``vacuum`` already
+  deleted makes them raise; a replay never skips one.
 
 Readers resolve their files from a head and never list a data
 directory, so they cannot see an uncommitted file or a half-done
-rewrite. A file a commit removes may still be open by a reader of the
-older head; callers delete removed files after the commit publishes and
-readers that then miss a file re-read the head.
+rewrite. A commit never deletes the files it removes: a reader of an
+older head, or a replay of the entries that added them, may still open
+them. The callers' vacuums (``vacuum_registry``, ``vacuum_store``)
+delete removed files only after a grace period.
 """
 
 from __future__ import annotations
@@ -136,17 +142,10 @@ class CommitLog:
         """Publish ``derive(head)`` as the next version; returns the new
         head (the current one when ``derive`` returns None: nothing to
         commit). ``derive`` runs again on the new head after every lost
-        race, and may raise to abort; a ``FileNotFoundError`` from it
-        means a file of its head was removed by a newer commit, so the
-        loop re-reads the head."""
+        race, and may raise to abort."""
         for _ in range(COMMIT_RETRIES):
             cur = self.head()
-            try:
-                entry = derive(cur)
-            except FileNotFoundError:
-                if self.head().version == cur.version:
-                    raise
-                continue
+            entry = derive(cur)
             if entry is None:
                 return cur
             nxt = _apply(cur, entry)
@@ -165,6 +164,42 @@ class CommitLog:
         raise RuntimeError(
             f"commit lost {COMMIT_RETRIES} consecutive races on {self.prefix!r}"
         )
+
+    def entries(self, after: int, upto: int):
+        """Yield ``(version, entry, age)`` for versions ``after+1 ..
+        upto`` in order, ``age`` being the seconds since the entry was
+        committed. Raises ``LookupError`` at an entry that ``vacuum``
+        deleted: a reader that far behind cannot replay the log."""
+        for version in range(after + 1, upto + 1):
+            got = self.backend.get(self._key("v", version))
+            if got is None:
+                raise LookupError(
+                    f"commit log {self.prefix!r}: entry {version} was vacuumed"
+                )
+            yield version, json.loads(got.data), got.age
+
+    def head_at(self, version: int) -> Head:
+        """The files at ``version``: the newest checkpoint at or below it
+        plus the entries after that. Raises ``LookupError`` when
+        ``vacuum`` deleted what that needs."""
+        cur = self.head()
+        if cur.version == version:
+            return cur
+        n = len(self.prefix) + 1
+        below = [
+            k for k in self.backend.list_keys(self.prefix + "c")
+            if int(k[n:-5]) <= version
+        ]
+        head = _EMPTY
+        if below:
+            got = self.backend.get(max(below))
+            if got is None:
+                raise LookupError(f"commit log {self.prefix!r}: {max(below)} was vacuumed")
+            ck = json.loads(got.data)
+            head = Head(ck["version"], {f["path"]: f for f in ck["files"]})
+        for _v, entry, _age in self.entries(head.version, version):
+            head = _apply(head, entry)
+        return head
 
     def checkpoint(self, head: Head) -> None:
         """Write the full file list at ``head`` (losing to an identical

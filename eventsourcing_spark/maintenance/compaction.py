@@ -13,7 +13,9 @@ maintenance rewrite: the new layout is VERIFIED before anything is
 committed — its (row count, order-free id fingerprint) must equal the
 pinned table's, else compaction aborts with the store untouched — and
 each bucket then commits remove+add on its log, keeping the appends
-committed meanwhile. File counts and bytes come from the bucket heads.
+committed meanwhile. The commits are marked ``data_change: false``, so
+the change feed does not deliver the rewritten rows again. File counts
+and bytes come from the bucket heads.
 """
 
 from __future__ import annotations
@@ -28,7 +30,9 @@ def compact_events(store: EventStore) -> dict:
     files = [f for h in pin.values() for f in h.files.values()]
     if not files:
         return {"files_before": 0, "files_after": 0, "bytes": 0, "rows": 0}
-    n_rows = store._rewrite_table("events", store._scan("events", pin), pin)
+    n_rows = store._rewrite_table(
+        "events", store._scan("events", pin), pin, data_change=False
+    )
     return {
         "files_before": len(files),
         "files_after": sum(len(h.files) for h in store._pin("events").values()),

@@ -1,4 +1,5 @@
-"""Vacuum: physically drop invalidated event generations past retention.
+"""Vacuum: physically drop invalidated event generations past retention,
+and delete the files and log entries no reader can need any more.
 
 Copy-replace migration (M2) leaves the old generation on disk with
 ``migration = rev`` — invisible to every read through the standing F8
@@ -13,8 +14,22 @@ rewrite: the retained frame is verified (row count + order-free id
 fingerprint) against what was staged before any bucket commits — a
 mismatch aborts with the store untouched — and each bucket then commits
 remove+add, keeping appends committed meanwhile (they are all
-``migration = 0``). On Delta/Iceberg this is VACUUM after a rewrite;
-the operator only builds DataFrames, so it ports unchanged.
+``migration = 0``); its commits are marked ``data_change: false``, as
+the change feed never delivered the dropped rows. On Delta/Iceberg this
+is VACUUM after a rewrite; the operator only builds DataFrames, so it
+ports unchanged.
+
+``vacuum_store`` is the store's one retention rule, the same one
+``vacuum_registry`` keeps for the registries: no commit deletes the
+files it removes, so a Spark frame or a point read over an older head
+and a change feed that is behind still find them. The vacuum deletes a
+file once no head names it and the entry that removed it is older than
+``grace_seconds``, plus the files of writers that never committed,
+once they are that old, and then vacuums the bucket logs. A file a head
+names therefore outlives that head by at least the grace period, which
+must exceed the longest query over an old head, the longest a change
+feed may lag, and the longest any write takes from its data files to
+its commit. On Delta this is VACUUM with its retention period.
 """
 
 from __future__ import annotations
@@ -50,7 +65,7 @@ def vacuum_migrated(store: EventStore, keep_revisions: int = 0) -> dict:
             "rows_dropped": 0,
             "files_before": files_before, "files_after": files_before,
         }
-    store._rewrite_table("events", kept, pin)
+    store._rewrite_table("events", kept, pin, data_change=False)
     return {
         "rows_before": n_before,
         "rows_after": n_keep,
@@ -58,3 +73,10 @@ def vacuum_migrated(store: EventStore, keep_revisions: int = 0) -> dict:
         "files_before": files_before,
         "files_after": sum(len(h.files) for h in store._pin("events").values()),
     }
+
+
+def vacuum_store(store: EventStore, grace_seconds: float = 300.0) -> dict:
+    """Delete the store's data files and log entries that no reader can
+    need any more (see the module docstring). Returns
+    ``{files_removed, log_keys_removed}``."""
+    return store._vacuum(grace_seconds)

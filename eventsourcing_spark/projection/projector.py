@@ -11,10 +11,12 @@ The reference protocol (C1-C5):
 2. **Switch** (C3, projection.go:213-256): the ``until`` boundary ULID is
    recorded as the live rejection threshold and delivered to the handler
    as a sentinel.
-3. **Live** (C5): a Structured Streaming query over the events table
-   starting before the boundary (deliberate overlap); every micro-batch
-   passes through the C2 dual rejection filter, then the handler +
-   checkpoint update run together (exactly-once effect).
+3. **Live** (C5): a Structured Streaming query over the store's change
+   feed (``events_file_stream``: the files each commit adds, read from
+   the per-bucket commit logs), starting before the boundary
+   (deliberate overlap); every micro-batch passes through the C2 dual
+   rejection filter, then the handler + checkpoint update run together
+   (exactly-once effect).
 
 The reference's distributed locks / worker balancing (C7) are NOT
 ported: Spark's scheduler and the single streaming query per projection
@@ -41,6 +43,7 @@ from pyspark.sql import functions as F
 from eventsourcing_spark.functions.ulid import ulid_time_only_py
 from eventsourcing_spark.projection.checkpoints import Checkpoints, CheckpointStore
 from eventsourcing_spark.store.event_store import EventStore, Filter
+from eventsourcing_spark.store.feed import events_file_stream  # noqa: F401 — the live source
 
 
 @dataclass(frozen=True)
@@ -194,27 +197,3 @@ class Projector:
         return events_stream.writeStream.foreachBatch(
             lambda df, _epoch: self.live_batch(df)
         )
-
-def events_file_stream(
-    store: EventStore, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """readStream over the events parquet dir (S8-S10 collapsed: Spark's
-    file source is the CDC feed; resume token = streaming checkpoint).
-
-    ``max_files_per_trigger`` is the backpressure knob — the analog of
-    the reference's 1000-row replay batches (projection/player.go:29):
-    bounds per-micro-batch work during a large backlog drain.
-    """
-    from eventsourcing_spark.schema import EVENT_SCHEMA
-
-    schema = EventStore._bucketed(EVENT_SCHEMA)
-    reader = store.spark.readStream.schema(schema).option(
-        "basePath", store._events_dir
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return (
-        reader.parquet(store._events_dir)
-        .drop("bucket")
-        .filter(F.col("migration") == 0)
-    )

@@ -28,33 +28,37 @@ mirroring the reference's split predicate (F3), and every bucket has its
 own commit log (``commit_log.CommitLog`` over the store's ``CasBackend``,
 keys ``<table>/<N>/…``; by default files under ``_log/``). The per-bucket
 log is the seam: a file is part of the table once, and only while, a log
-entry adds it, and every read — the Spark views and the driver-side
-``_read_stream`` alike — resolves its files from the bucket heads and
-never lists a directory. ``append`` / ``save_snapshot`` write one file
-under ``<table>/_pending/`` and ``put_if_absent`` the next version of the
-stream's bucket log; losing that race re-runs the conflict check against
-the new head (a version clash still raises
-``ConcurrentModificationError``, the reference's unique index,
-store/postgresql/store.go:258-264). Only a published commit moves its
-files into ``bucket=N/``, so a directory reader (the file-source stream
-of ``projection.events_file_stream``) never sees a rejected write. Writers on
-different buckets never wait for each other. Each driver-side entry
-records its one ``aggregate_id``, so a point read opens only the files
-that can hold its stream; Spark-written files (``bulk_import``, the
-maintenance rewrites) carry no id and are always read. ``_rewrite_table``
-is the one rewrite path of the maintenance operators (forget,
-migrations, compaction, vacuum): a verified staged write, then one
-remove+add commit per bucket that merges appends committed meanwhile, or
-raises ``ConcurrentModificationError`` when a newer entry may hold a
-stream a migration rewrote. On a lakehouse the per-bucket log is a
-Delta/Iceberg table's own log. Only this class knows the layout.
+entry adds it, and every reader — the Spark views, the driver-side
+``_read_stream`` and the change feed (``store/feed.py``) alike —
+resolves its files from the log and never lists a directory.
+``append`` / ``save_snapshot`` write one file at its final path in
+``bucket=N/`` and ``put_if_absent`` the next version of the stream's
+bucket log; losing that race re-runs the conflict check against the new
+head (a version clash still raises ``ConcurrentModificationError``, the
+reference's unique index, store/postgresql/store.go:258-264), and a
+rejected write deletes its file. Writers on different buckets never
+wait for each other. Each driver-side entry records its one
+``aggregate_id``, so a point read opens only the files that can hold its
+stream; Spark-written files (``bulk_import``, the maintenance rewrites)
+carry no id and are always read. ``_rewrite_table`` is the one rewrite
+path of the maintenance operators (forget, migrations, compaction,
+vacuum): a verified write, then one remove+add commit per bucket that
+merges appends committed meanwhile, or raises
+``ConcurrentModificationError`` when a newer entry may hold a stream a
+migration rewrote. Commits never delete the files they remove, so a
+frame or a head read before a rewrite still reads its rows;
+``maintenance.vacuum_store`` deletes them once a grace period has
+passed. On a lakehouse the per-bucket log is a Delta/Iceberg table's own
+log. Only this class knows the layout.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import pathlib
 import shutil
+import time
 import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
@@ -83,9 +87,6 @@ def _arrow_schema(schema) -> pa.Schema:
 
 _SCHEMAS = {"events": EVENT_SCHEMA, "snapshots": SNAPSHOT_SCHEMA}
 _ARROW_SCHEMAS = {t: _arrow_schema(s) for t, s in _SCHEMAS.items()}
-
-
-_PENDING = "_pending"  # uncommitted files, hidden from directory readers
 
 
 def _may_hold(files: list[dict], streams: DataFrame) -> bool:
@@ -508,47 +509,28 @@ class EventStore:
             buckets = range(self.n_buckets)
         return {b: self._logs[table, b].head() for b in buckets}
 
-    def _paths(self, table: str, rels, resolve: bool = False) -> list[str]:
-        """Absolute paths of committed files. A file is written under
-        ``<table>/_pending/`` and moved to its committed path right after
-        its commit publishes; ``resolve`` looks a missing file up there,
-        for a read that lands between the two."""
+    def _paths(self, table: str, rels) -> list[str]:
+        """Absolute paths of files named relative to ``table``."""
         root = self._dir(table)
-        out = []
-        for rel in rels:
-            path = os.path.join(root, rel)
-            if resolve and not os.path.exists(path):
-                path = os.path.join(root, _PENDING, rel)
-            out.append(path)
-        return out
+        return [os.path.join(root, rel) for rel in rels]
 
-    def _scan(self, table: str, pin: dict[int, Head]) -> DataFrame:
-        """Spark frame over exactly the files of ``pin``."""
-        from pyspark.errors import AnalysisException
-
-        rels = [p for h in pin.values() for p in h.files]
+    def _read(self, table: str, rels) -> DataFrame:
+        """Spark frame over exactly the files ``rels``."""
         if not rels:
             return self.spark.createDataFrame([], _SCHEMAS[table])
-        reader = self.spark.read.schema(_SCHEMAS[table])
-        try:
-            return reader.parquet(*self._paths(table, rels))
-        except AnalysisException:
-            return reader.parquet(*self._paths(table, rels, resolve=True))
+        return self.spark.read.schema(_SCHEMAS[table]).parquet(
+            *self._paths(table, rels)
+        )
+
+    def _scan(self, table: str, pin: dict[int, Head]) -> DataFrame:
+        """Spark frame over exactly the files of ``pin``. They stay on disk
+        for ``vacuum_store``'s grace period after a commit removes them,
+        so the frame reads the same rows when it runs after a rewrite."""
+        return self._read(table, [p for h in pin.values() for p in h.files])
 
     def _view(self, table: str, buckets=None) -> DataFrame:
-        """``_scan`` of the current heads; a file a rewrite deleted between
-        the head read and Spark's existence check re-reads the heads."""
-        from pyspark.errors import AnalysisException
-
-        pin = self._pin(table, buckets)
-        while True:
-            try:
-                return self._scan(table, pin)
-            except AnalysisException:
-                fresh = self._pin(table, buckets)
-                if all(fresh[b].version == h.version for b, h in pin.items()):
-                    raise
-                pin = fresh
+        """``_scan`` of the current heads."""
+        return self._scan(table, self._pin(table, buckets))
 
     def _read_stream(
         self,
@@ -567,43 +549,29 @@ class EventStore:
         pyarrow pushes ``aggregate_id == …`` and the optional ``where``
         expression down to row-group statistics, so a single-key read
         launches no cluster job. The F4 ``discriminator`` conjunction
-        runs on the few surviving rows. A missing file is looked up under
-        ``_pending/`` (committed, not moved in yet); one that a rewrite
-        deleted after the head was read makes the read start over from
-        the new head, or raise ``FileNotFoundError`` with a given ``head``.
+        runs on the few surviving rows.
         """
         import pyarrow.dataset as ds
 
-        log = self._logs[table, self._bucket(aggregate_id)]
-        cur = head or log.head()
+        head = head or self._logs[table, self._bucket(aggregate_id)].head()
+        rels = [
+            p for p, f in head.files.items()
+            if f.get("aggregate_id", aggregate_id) == aggregate_id
+        ]
+        if not rels:
+            return []
         flt = ds.field("aggregate_id") == aggregate_id
         if where is not None:
             flt = flt & where
         read = columns + ["discriminator"] if discriminator else columns
-        misses = 0
-        while True:
-            rels = [
-                p for p, f in cur.files.items()
-                if f.get("aggregate_id", aggregate_id) == aggregate_id
-            ]
-            if not rels:
-                return []
-            paths = self._paths(table, rels, resolve=misses > 0)
-            try:
-                rows = (
-                    ds.dataset(paths, schema=_ARROW_SCHEMAS[table], format="parquet")
-                    .to_table(columns=read, filter=flt)
-                    .to_pylist()
-                )
-                break
-            except FileNotFoundError:
-                fresh = cur if head is not None else log.head()
-                if fresh.version != cur.version:
-                    cur, misses = fresh, 0
-                elif misses == 2:
-                    raise
-                else:
-                    misses += 1  # committed, maybe still under _pending/
+        rows = (
+            ds.dataset(
+                self._paths(table, rels), schema=_ARROW_SCHEMAS[table],
+                format="parquet",
+            )
+            .to_table(columns=read, filter=flt)
+            .to_pylist()
+        )
         if discriminator:
             rows = [
                 r for r in rows
@@ -633,31 +601,30 @@ class EventStore:
         check=None,
     ) -> None:
         """Driver-side commit of one aggregate's rows for the single-key
-        OLTP path: one parquet file, no Spark job (the reference's analog
-        is a one-transaction SQL insert, store/sql.go:39-61), then the
-        next version of the aggregate's bucket log, whose entry records
-        the aggregate. ``check(head)`` conflict-checks against every head
-        the entry is committed over except ``seen``, the one the caller
-        already checked. The file is written under ``_pending/`` and moved
-        into its bucket directory once the commit has published, so a
-        directory reader never sees a rejected append; a failed commit
-        deletes it. Bulk/distributed writes go through ``_append_rows_df``."""
+        OLTP path: one parquet file at its final path, no Spark job (the
+        reference's analog is a one-transaction SQL insert,
+        store/sql.go:39-61), then the next version of the aggregate's
+        bucket log, whose entry records the aggregate. ``check(head)``
+        conflict-checks against every head the entry is committed over
+        except ``seen``, the one the caller already checked. A failed
+        commit deletes the file. Bulk/distributed writes go through
+        ``_append_rows_df``."""
         import pyarrow.parquet as pq
 
         bucket = self._bucket(aggregate_id)
         rel = f"bucket={bucket}/part-{uuid.uuid4().hex}.parquet"
-        pending = os.path.join(self._dir(table), _PENDING, rel)
+        path = os.path.join(self._dir(table), rel)
         schema = _ARROW_SCHEMAS[table]
-        os.makedirs(os.path.dirname(pending), exist_ok=True)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
         pq.write_table(
             pa.Table.from_pylist(
                 [dict(zip(schema.names, r)) for r in rows], schema=schema
             ),
-            pending,
+            path,
         )
         entry = {"add": [{
             "path": rel, "aggregate_id": aggregate_id,
-            "bytes": os.path.getsize(pending),
+            "bytes": os.path.getsize(path),
         }]}
 
         def derive(head: Head) -> dict:
@@ -668,22 +635,8 @@ class EventStore:
         try:
             self._logs[table, bucket].commit(derive)
         except BaseException:
-            os.remove(pending)
+            os.remove(path)
             raise
-        self._publish(table, [rel])
-
-    def _publish(self, table: str, rels) -> None:
-        """Move committed files from ``_pending/`` to their bucket
-        directories. A file a newer rewrite already removed is gone from
-        both places (``_delete`` clears ``_pending/`` first)."""
-        root = self._dir(table)
-        for rel in rels:
-            path = os.path.join(root, rel)
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            try:
-                os.replace(os.path.join(root, _PENDING, rel), path)
-            except FileNotFoundError:
-                pass
 
     def _append_rows_df(self, df: DataFrame, pin=None, streams=None) -> None:
         """Spark-written events, committed bucket by bucket (see
@@ -694,9 +647,8 @@ class EventStore:
 
     def _write_staging(self, table: str, df: DataFrame, one_file=False) -> str:
         """Write ``df`` with its ``bucket`` column, partitioned by it, under
-        a fresh ``<table>/_staging-*`` directory (ignored by directory
-        readers; no log lists it). ``one_file``: one id-sorted file per
-        bucket, the rewrite layout."""
+        a fresh ``<table>/_staging-*`` directory. ``one_file``: one
+        id-sorted file per bucket, the rewrite layout."""
         key = F.col("aggregate_id_hash") if table == "events" else fnv1a_32(
             F.col("aggregate_id")
         )
@@ -712,22 +664,23 @@ class EventStore:
         return staging
 
     def _move_staged(self, table: str, staging: str) -> dict[int, list[dict]]:
-        """Move the staged files under ``_pending/``, where ``_publish``
-        takes them from once their bucket commits, and remove the staging
-        directory; returns each bucket's file entries."""
+        """Move the staged files to their final paths in the bucket
+        directories, where nothing reads them until a commit names them,
+        and remove the staging directory; returns each bucket's file
+        entries."""
         staged: dict[int, list[dict]] = {}
         try:
             for part in os.scandir(staging):
                 if not part.name.startswith("bucket="):
                     continue
                 bucket = int(part.name.split("=", 1)[1])
-                pending = os.path.join(self._dir(table), _PENDING, part.name)
-                os.makedirs(pending, exist_ok=True)
+                final = os.path.join(self._dir(table), part.name)
+                os.makedirs(final, exist_ok=True)
                 for f in os.scandir(part.path):
                     if f.name.endswith(".parquet"):
                         rel = f"{part.name}/{f.name}"
                         size = f.stat().st_size
-                        os.replace(f.path, os.path.join(pending, f.name))
+                        os.replace(f.path, os.path.join(final, f.name))
                         staged.setdefault(bucket, []).append(
                             {"path": rel, "bytes": size}
                         )
@@ -739,31 +692,27 @@ class EventStore:
         return staged
 
     def _delete(self, table: str, rels) -> None:
-        """Delete files, each from ``_pending/`` first and then from its
-        bucket directory: whichever order ``_publish`` runs in against
-        this, the file does not survive."""
-        root = self._dir(table)
-        for rel in rels:
-            for path in (os.path.join(root, _PENDING, rel), os.path.join(root, rel)):
-                try:
-                    os.remove(path)
-                except FileNotFoundError:
-                    pass
+        """Delete uncommitted files."""
+        for path in self._paths(table, rels):
+            pathlib.Path(path).unlink(missing_ok=True)
 
     def _commit_staged(
-        self, table, staged, pin=None, streams=None, replace=False
+        self, table, staged, pin=None, streams=None, replace=False,
+        data_change=True,
     ) -> None:
         """Commit ``staged`` files bucket by bucket, in bucket order.
 
         ``replace``: each bucket's entry also removes the files ``pin``
         listed for it; it raises ConcurrentModificationError when a newer
-        commit already removed one (first committer wins), keeps files
-        committed since ``pin`` (concurrent appends are merged), and
-        deletes the removed files once it is published. ``streams`` (a
-        frame with an ``aggregate_id`` column, left on the executors):
-        raise ConcurrentModificationError instead of merging when a file
+        commit already removed one (first committer wins) and keeps files
+        committed since ``pin`` (concurrent appends are merged). Removed
+        files stay on disk for ``vacuum_store``. ``streams`` (a frame
+        with an ``aggregate_id`` column, left on the executors): raise
+        ConcurrentModificationError instead of merging when a file
         committed since ``pin`` may hold one of them — its entry records
-        no id, or one that a Spark job finds in ``streams``. A bucket
+        no id, or one that a Spark job finds in ``streams``.
+        ``data_change=False`` marks entries that only rearrange or drop
+        rows already delivered, which the change feed skips. A bucket
         that raises leaves the buckets before it committed; its own and
         later staged files are deleted.
         """
@@ -773,9 +722,12 @@ class EventStore:
         for i, b in enumerate(buckets):
             old = pin[b].files if pin else {}
             remove = list(old) if replace else []
+            entry = {"remove": remove, "add": staged[b]}
+            if not data_change:
+                entry["data_change"] = False
 
-            def derive(head: Head, b=b, old=old, remove=remove) -> dict:
-                if any(p not in head.files for p in remove):
+            def derive(head: Head, b=b, old=old, entry=entry) -> dict:
+                if any(p not in head.files for p in entry["remove"]):
                     raise ConcurrentModificationError(
                         f"{table} bucket {b} was rewritten concurrently"
                     )
@@ -786,18 +738,51 @@ class EventStore:
                         f"{table} bucket {b}: a stream being rewritten "
                         "was appended to concurrently"
                     )
-                return {"remove": remove, "add": staged[b]}
+                return entry
 
             try:
                 self._logs[table, b].commit(derive)
             except BaseException:
                 self._delete(table, [f["path"] for c in buckets[i:] for f in staged[c]])
                 raise
-            self._publish(table, [f["path"] for f in staged[b]])
-            self._delete(table, remove)
+
+    def _vacuum(self, grace_seconds: float) -> dict:
+        """Delete the files under each ``<table>/bucket=N/`` that no
+        reader can need: not named by the bucket head, not removed by a
+        log entry younger than ``grace_seconds`` (a reader of an older
+        head may still open it), and themselves older than that (a write
+        whose commit has not published yet). Then vacuum the bucket logs
+        with the same grace. The directory is listed before the head is
+        read, so only a write that has been waiting longer than the grace
+        period for its commit can be taken for an orphan."""
+        cutoff = time.time() - grace_seconds
+        files = keys = 0
+        for (table, b), log in self._logs.items():
+            folder = os.path.join(self._dir(table), f"bucket={b}")
+            listed = (
+                [(e.name, e.stat().st_mtime) for e in os.scandir(folder)]
+                if os.path.isdir(folder) else []
+            )
+            head = log.head()
+            keep = set(head.files)
+            for v in range(head.version, 0, -1):
+                try:
+                    _v, entry, age = next(log.entries(v - 1, v))
+                except LookupError:
+                    break
+                if age > grace_seconds:
+                    break
+                keep.update(entry.get("remove", ()))
+            for name, mtime in listed:
+                if f"bucket={b}/{name}" not in keep and mtime < cutoff:
+                    pathlib.Path(folder, name).unlink(missing_ok=True)
+                    files += 1
+            keys += log.vacuum(grace_seconds)
+        return {"files_removed": files, "log_keys_removed": keys}
 
     def _rewrite_table(
-        self, table: str, df: DataFrame, pin: dict[int, Head], streams=None
+        self, table: str, df: DataFrame, pin: dict[int, Head], streams=None,
+        data_change: bool = True,
     ) -> int:
         """Replace the files ``pin`` lists in the ``events`` or ``snapshots``
         table with ``df``, built from ``_scan(table, pin)``; returns its row
@@ -805,36 +790,28 @@ class EventStore:
         has no UPDATE/DELETE, so on Delta/Iceberg this method becomes their
         ``UPDATE``/``MERGE``/``OPTIMIZE`` transaction.
 
-        ``df`` is staged as one id-sorted file per bucket, read back with
-        the explicit schema and published bucket by bucket (``_commit_staged``
-        with ``replace``) only if its (row count, order-free id
-        fingerprint) equals ``df``'s; a mismatch deletes the staged files
-        and publishes nothing.
+        ``df`` is written as one id-sorted file per bucket, moved to its
+        final paths, read back by those paths and committed bucket by
+        bucket (``_commit_staged`` with ``replace``, passing
+        ``data_change`` on) only if its (row count, order-free id
+        fingerprint) equals ``df``'s; a mismatch deletes the new files and
+        commits nothing.
         """
-        schema = _SCHEMAS[table]
-        df = df.select(*schema.names)
+        df = df.select(*_SCHEMAS[table].names)
         expected = _fingerprint(df)
-        staging = self._write_staging(table, df, one_file=True)
+        staged = self._move_staged(table, self._write_staging(table, df, one_file=True))
+        rels = [f["path"] for fs in staged.values() for f in fs]
         try:
-            written = _fingerprint(
-                self.spark.read.schema(self._bucketed(schema)).parquet(staging)
-            )
+            written = _fingerprint(self._read(table, rels))
             if written != expected:
                 raise RuntimeError(
                     f"{table} rewrite verification failed: (rows, fingerprint) "
                     f"{expected} -> {written}; table left untouched"
                 )
         except BaseException:
-            shutil.rmtree(staging, ignore_errors=True)
+            self._delete(table, rels)
             raise
-        staged = self._move_staged(table, staging)
-        self._commit_staged(table, staged, pin, streams, replace=True)
-        return expected[0]
-
-    @staticmethod
-    def _bucketed(schema):
-        from pyspark.sql import types as T
-
-        return T.StructType(
-            list(schema.fields) + [T.StructField("bucket", T.IntegerType(), True)]
+        self._commit_staged(
+            table, staged, pin, streams, replace=True, data_change=data_change
         )
+        return expected[0]

@@ -652,3 +652,27 @@ def test_real_object_store_smoke():
 
 if __name__ == "__main__":
     raise SystemExit(pytest.main([__file__, "-q"]))
+
+
+def _put_from_child(shared, key):
+    return shared.put_if_absent(key, b"child"), shared.get(key).data
+
+
+def test_memory_backend_is_shared_with_another_process():
+    """``MemoryCasBackend.shared()`` pickles to a client of the same keys:
+    a spawned process creates a key the owner then reads, loses a race on
+    a key the owner holds, and sees errors raised, not swallowed."""
+    import multiprocessing
+    import pickle
+
+    b = MemoryCasBackend()
+    b.put_if_absent("held", b"owner")
+    ctx = multiprocessing.get_context("spawn")
+    with ctx.Pool(1) as pool:
+        v, data = pool.apply(_put_from_child, (b.shared(), "made"))
+        assert v is not None and data == b"child"
+        assert pool.apply(_put_from_child, (b.shared(), "held")) == (None, b"owner")
+    assert b.get("made").data == b"child"
+    client = pickle.loads(pickle.dumps(b.shared()))
+    with pytest.raises(ValueError, match="unknown CAS operation"):
+        client._call("rewind", "made", 1.0)

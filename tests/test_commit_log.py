@@ -133,28 +133,27 @@ def test_vacuum_keeps_head_readable(backend):
     assert len(CommitLog(backend, "v/").head().files) == 8
 
 
-def test_file_not_found_in_derive_rereads_the_head(backend):
-    """A derive that finds a file of its head deleted retries on the newer
-    head; on an unchanged head the error is real and propagates."""
-    a, b = CommitLog(backend, "t/"), CommitLog(backend, "t/")
-    a.commit(add("old"))
-    seen = []
-
-    def derive(head):
-        seen.append(head.version)
-        if "old" in head.files:  # a rewrite removes it under our feet
-            a.commit(lambda h: {"remove": ["old"], "add": [{"path": "new"}]})
-            raise FileNotFoundError("old")
-        return {"add": [{"path": "mine"}]}
-
-    assert list(b.commit(derive).files) == ["new", "mine"]
-    assert seen == [1, 2]
-
-    def missing(head):
-        raise FileNotFoundError("gone")
-
-    with pytest.raises(FileNotFoundError):
-        b.commit(missing)
+def test_entries_replay_in_order_until_vacuumed(backend):
+    """``entries`` yields each version's entry with its age, in order, and
+    ``head_at`` the files at a version; both raise when they need an
+    entry a vacuum deleted instead of skipping it."""
+    log = CommitLog(backend, "r/")
+    log.commit(add("a"))
+    log.commit(lambda h: {"remove": ["a"], "add": [{"path": "b"}], "data_change": False})
+    log.commit(add("c"))
+    got = list(log.entries(1, 3))
+    assert [v for v, _e, _a in got] == [2, 3]
+    assert got[0][1]["data_change"] is False and got[1][1]["add"] == [{"path": "c"}]
+    assert all(0 <= age < 60 for _v, _e, age in got)
+    assert list(log.entries(3, 3)) == []
+    assert [list(log.head_at(v).files) for v in (1, 2, 3)] == [["a"], ["b"], ["b", "c"]]
+    log.vacuum(grace_seconds=0.0)
+    assert list(log.entries(2, 3))[0][0] == 3
+    assert list(log.head_at(3).files) == ["b", "c"]
+    with pytest.raises(LookupError, match="vacuumed"):
+        list(log.entries(0, 3))
+    with pytest.raises(LookupError, match="vacuumed"):
+        log.head_at(2)
 
 
 def test_racing_committers_lose_nothing(backend):

@@ -398,32 +398,29 @@ def test_store_refuses_data_without_its_log(spark, new_store, tmp_path):
     assert [r["aggregate_version"] for r in again.read_aggregate_events("a")] == [1]
 
 
-def test_reads_find_a_commit_whose_file_is_not_moved_in_yet(
-    new_store, tmp_path, monkeypatch
-):
-    """An append's file waits under ``events/_pending/`` until its commit
-    has published. A driver-side read, a Spark view and the next
-    append's conflict check made between the commit and the move all
-    find it."""
-    store = new_store(tmp_path / "pending", n_buckets=2)
+def test_reads_find_a_commit_right_after_its_put(new_store, tmp_path, monkeypatch):
+    """An append's file is at its final path before its commit. A
+    driver-side read, a Spark view and the next append's conflict check
+    made right after the commit's ``put_if_absent`` all find it."""
+    store = new_store(tmp_path / "put", n_buckets=2)
     store.append("a", "Account", [(KIND_CREATED, {"money": 1, "owner": "O"})],
                  expected_version=0, created_at=T0)
     seen = []
-    real = EventStore._publish
+    real = store.backend.put_if_absent
 
-    def publish(self, table, rels):
-        if table == "events" and not seen:
-            assert not (tmp_path / "pending/events" / rels[0]).exists()
-            seen.append([r["aggregate_version"] for r in self.read_aggregate_events("a")])
+    def put(key, data):
+        version = real(key, data)
+        if key.startswith("events/") and version is not None and not seen:
+            seen.append([r["aggregate_version"] for r in store.read_aggregate_events("a")])
             seen.append(sorted(
-                r.aggregate_version for r in self.get_aggregate_events("a").collect()
+                r.aggregate_version for r in store.get_aggregate_events("a").collect()
             ))
             with pytest.raises(ConcurrentModificationError):
-                self.append("a", "Account", [(KIND_DEPOSITED, {"money": 3})],
-                            expected_version=1, created_at=T0)
-        real(self, table, rels)
+                store.append("a", "Account", [(KIND_DEPOSITED, {"money": 3})],
+                             expected_version=1, created_at=T0)
+        return version
 
-    monkeypatch.setattr(EventStore, "_publish", publish)
+    monkeypatch.setattr(store.backend, "put_if_absent", put)
     store.append("a", "Account", [(KIND_DEPOSITED, {"money": 2})],
                  expected_version=1, created_at=T0)
     assert seen == [[1, 2], [1, 2]]

@@ -12,7 +12,12 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
-from eventsourcing_spark.maintenance import compact_events, forget, migrate_in_place
+from eventsourcing_spark.maintenance import (
+    compact_events,
+    forget,
+    migrate_in_place,
+    vacuum_store,
+)
 from eventsourcing_spark.maintenance.migration import KIND_INVALIDATED
 from eventsourcing_spark.store.codec import JsonCodec
 
@@ -291,6 +296,7 @@ def test_compaction_preserves_data_and_reduces_files(new_store, tmp_path):
     n_files_before = len(glob.glob(str(tmp_path / "cp/events/**/*.parquet"), recursive=True))
     compact_events(store)
     after = {(r.id, r.aggregate_id) for r in store.events().collect()}
+    vacuum_store(store, grace_seconds=0)  # the superseded files stay until then
     n_files_after = len(glob.glob(str(tmp_path / "cp/events/**/*.parquet"), recursive=True))
     assert before == after
     assert n_files_after <= 4 < n_files_before
